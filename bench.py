@@ -1508,6 +1508,45 @@ def _compact_query_map(timings: dict[str, float]) -> tuple[dict[str, float], int
     return out, len(timings) - len(out)
 
 
+def _shed_compact_line(compact: dict, n_queries: int, compare_verdict: dict | None) -> str:
+    """Serialize the printed line, shedding from ``compact`` until it fits
+    _COMPACT_LINE_BUDGET (only a ~2000-char stdout tail is recorded).
+    Order: unpinned per-query entries (cheapest first), then families, then
+    the compare block — the pinned "queries" names and the headline totals
+    go last because cross-round comparisons join on them.  The final
+    backstop may still drop pinned names; it says so on stderr, like
+    missing pins."""
+    compact_queries = compact["queries"]
+    pinned = set(_compact_pin_names())
+
+    def dump() -> str:
+        compact["qx"] = n_queries - len(compact_queries)
+        return json.dumps(compact, separators=(",", ":"))
+
+    line = dump()
+    for name in sorted(compact_queries, key=compact_queries.get):
+        if len(line) <= _COMPACT_LINE_BUDGET:
+            break
+        if name not in pinned:
+            compact_queries.pop(name)
+            line = dump()
+    if len(line) > _COMPACT_LINE_BUDGET:
+        compact.pop("families", None)
+        compact["compare"] = {k: compare_verdict[k] for k in ("vs", "reg", "imp")
+                              if compare_verdict and k in compare_verdict}
+        line = dump()
+    shed_pins = []
+    while len(line) > _COMPACT_LINE_BUDGET and compact_queries:
+        name = min(compact_queries, key=compact_queries.get)
+        compact_queries.pop(name)
+        if name in pinned:
+            shed_pins.append(name)
+        line = dump()
+    if shed_pins:
+        log(f"[bench] WARN shed pinned query names: {shed_pins}")
+    return line
+
+
 def _load_prev_detail() -> tuple[dict, str] | None:
     """Previous round's sidecar for the round-over-round verdict: env
     override, else the newest committed bench_out/r*.json."""
@@ -1777,31 +1816,7 @@ def main() -> int:
         compact["sf1x100"] = _smoke_summary(sf1x100)
     if compare_verdict is not None:
         compact["compare"] = compare_verdict
-    line = json.dumps(compact, separators=(",", ":"))
-    # Byte budget: the driver's stdout tail is ~2000 chars; shed from the
-    # line until it fits with margin.  Order: unpinned per-query entries
-    # (cheapest first), then families, then the compare block — the pinned
-    # "queries" names and the headline totals go last because they are the
-    # driver's PERF contract.
-    if len(line) > _COMPACT_LINE_BUDGET:
-        pinned = set(_compact_pin_names())
-        for name in sorted(compact_queries, key=compact_queries.get):
-            if len(line) <= _COMPACT_LINE_BUDGET:
-                break
-            if name in pinned:
-                continue
-            compact_queries.pop(name, None)
-            compact["qx"] = len(timings) - len(compact_queries)
-            line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > _COMPACT_LINE_BUDGET:
-        compact.pop("families", None)
-        compact["compare"] = {k: compare_verdict[k] for k in ("vs", "reg", "imp")
-                              if compare_verdict and k in compare_verdict}
-        line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > _COMPACT_LINE_BUDGET and compact_queries:
-        compact_queries.pop(min(compact_queries, key=compact_queries.get), None)
-        compact["qx"] = len(timings) - len(compact_queries)
-        line = json.dumps(compact, separators=(",", ":"))
+    line = _shed_compact_line(compact, len(timings), compare_verdict)
     log(f"[bench] compact line: {len(line)} chars")
     print(line)
     return 0

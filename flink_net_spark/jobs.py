@@ -138,16 +138,14 @@ class JobManager:
                     pass  # a failed run surfaces its error here; restart anyway
         if new_shuffle_partitions is None:
             return spec.start(self.spark)
+        from flink_net_spark.tables import scoped_shuffle_partitions
+
         # Scope the parallelism override to this job's start: the resumed
         # checkpoint pins its own state partitioning anyway, and leaving the
         # session-global conf mutated would silently rescale every other
         # query sharing the SparkSession.
-        prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(new_shuffle_partitions))
-        try:
+        with scoped_shuffle_partitions(self.spark, new_shuffle_partitions):
             return spec.start(self.spark)
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @dataclass

@@ -23,7 +23,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
-from flink_net_spark.tables import load_table, scoped_persist, spread_small_scan
+from flink_net_spark.tables import (
+    BuildScope,
+    derived_shuffle_partitions,
+    load_table,
+    release_persisted,
+    scoped_persist,
+    scoped_shuffle_partitions,
+    spread_small_scan,
+)
 
 MINHASH_K = 16
 LSH_BANDS = 8  # 2 rows per band
@@ -151,8 +159,8 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[Da
     ``(pairs, caches)`` tuple (the ``kn_scored_transitions`` contract;
     the r9 ADVICE minor: an ad-hoc attribute on the DataFrame broke
     silently for any consumer that transformed it first).  Consumers pass
-    the caches to ``scoped_persist`` with their FINAL result, or release
-    them directly once their eager work is done.
+    the caches to ``scoped_persist`` with their FINAL result, or hold them
+    in a ``BuildScope`` and release them once their eager work is done.
 
     The shingle DF feeds three subtrees (signatures + both verify sides);
     persist() shares one scan/compute across them — Catalyst does not
@@ -471,20 +479,7 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     un-truncated loop compiles a 1000+-join plan and recomputes from
     scratch on any cache eviction).  The oracle walks the same components
     with a recursive CTE."""
-    from flink_net_spark.tables import (
-        acquire_persisted,
-        checkpoint_tracked,
-        release_acquired,
-        release_rdd_ids,
-        release_rdds_with_result,
-    )
-
     mp, mp_caches = _minhash_pairs(spark, sf_dir)
-    # Refcounted use: a live dedup_minhash_lsh result may be scoped (same
-    # semantic plan key) to these caches — releasing through _PLAN_REFS
-    # instead of a direct unpersist() leaves its cache alive until BOTH
-    # users are done (r10 ADVICE).
-    mp_keys = acquire_persisted(*mp_caches)
     pairs = mp.select("doc_a", "doc_b")
     # r17 (guide §2.2): the convergence loop runs under an input-derived
     # shuffle-partition count — the pair graph is pairs-not-documents sized
@@ -492,34 +487,32 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-task stages.  Measured at sf0.1 (tools/exp_iter_parts.py,
     # fingerprints identical): 2.80 → 1.99 s warm median.  MIN-over-BIGINT
     # label propagation is partition-count-independent.
-    from flink_net_spark.tables import (
-        derived_shuffle_partitions,
-        scoped_shuffle_partitions,
-    )
-
-    with scoped_shuffle_partitions(
+    with BuildScope() as scope, scoped_shuffle_partitions(
         spark, derived_shuffle_partitions(sf_dir, ["documents"])
     ):
-        edge_ids: list[int] = []
-        edges = checkpoint_tracked(
+        # Refcounted hold: a live dedup_minhash_lsh result may share these
+        # caches (same semantic plan key); they stay cached until BOTH
+        # users are done (r10 ADVICE).
+        for c in mp_caches:
+            scope.persist(c)
+        edges = scope.checkpoint(
             pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
                 pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
             ),
-            edge_ids,
+            eager=True,
         )
-        label_ids: list[int] = []
-        labels = checkpoint_tracked(
+        ck = scope.checkpoint(
             edges.select(F.col("u").alias("id")).distinct().withColumn("label", F.col("id")),
-            label_ids,
+            eager=True,
         )
+        labels = ck
         for _ in range(50):  # bound: diameter of the largest component
             nbr = (
                 edges.join(labels.withColumnRenamed("id", "v_id"), F.col("v") == F.col("v_id"))
                 .groupBy("u")
                 .agg(F.min("label").alias("nbr_min"))
             )
-            new_ids: list[int] = []
-            new_labels = checkpoint_tracked(  # eager: materializes + truncates lineage
+            new_ck = scope.checkpoint(  # eager: materializes + truncates lineage
                 labels.withColumnRenamed("label", "old_label")
                 .join(nbr.withColumnRenamed("u", "id"), "id", "left")
                 .select(
@@ -529,31 +522,27 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).alias("label"),
                     "old_label",
                 ),
-                new_ids,
+                eager=True,
             )
-            changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
+            changed = new_ck.filter(F.col("label") != F.col("old_label")).count()
             # the new checkpoint is materialized: its parent round's cache is
             # superseded — release it now instead of leaking one per iteration
-            release_rdd_ids(spark, label_ids)
-            label_ids = new_ids
-            labels = new_labels.select("id", "label")
+            scope.release(ck)
+            ck, labels = new_ck, new_ck.select("id", "label")
             if changed == 0:
                 break
-    # the loop ran eagerly off the localCheckpoints; the shingle cache
-    # behind the pair generation and the edge checkpoint are no longer
-    # referenced — release them now.  The FINAL label checkpoint backs the
-    # returned plan, so it rides the result handle's lifetime.
-    release_acquired(mp_keys)
-    release_rdd_ids(spark, edge_ids)
-    return release_rdds_with_result(
-        labels.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("group_id"),
-            (F.col("label") == F.col("id")).alias("keep"),
-        ).orderBy("doc_id"),
-        spark,
-        label_ids,
-    )
+        # the loop ran eagerly off the localCheckpoints; the shingle cache
+        # behind the pair generation and the edge checkpoint are no longer
+        # referenced — release them now.  The FINAL label checkpoint backs
+        # the returned plan, so it rides the result handle's lifetime.
+        scope.release(edges, *mp_caches)
+        return scope.bind(
+            labels.select(
+                F.col("id").alias("doc_id"),
+                F.col("label").alias("group_id"),
+                (F.col("label") == F.col("id")).alias("keep"),
+            ).orderBy("doc_id")
+        )
 
 
 _NGRAM_BLOCK_CAP = 1000
@@ -1970,20 +1959,12 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("group_id")
     )
-    # the upstream result's checkpointed label RDDs back THIS plan too:
-    # pin the upstream handle to this result's lifetime (GC path) AND
-    # forward a deterministic release so release_persisted(out) frees the
-    # upstream blocks without waiting for the collector (r13 ADVICE).
-    # Contract: a consumer that derives a new DataFrame from this result
-    # must keep THIS handle alive until the derived job finishes —
-    # dropping it lets the upstream finalizer unpersist lineage-truncated
-    # checkpoint blocks mid-collect.
-    from flink_net_spark.tables import attach_release, release_persisted
-
-    out._fns_upstream = base
-
-    def _release_upstream(b=base):
-        release_persisted(b)
-
-    attach_release(out, _release_upstream)
-    return out
+    # the upstream result's label checkpoint backs THIS plan too: its
+    # release rides this result's list, whose step pins the upstream handle
+    # so its own GC backstop cannot fire first (r13 ADVICE).  Contract: a
+    # consumer that derives a new DataFrame from this result must keep THIS
+    # handle alive until the derived job finishes — dropping it lets the
+    # upstream checkpoint blocks go mid-collect.
+    scope = BuildScope()
+    scope.on_release(release_persisted, base)
+    return scope.bind(out)

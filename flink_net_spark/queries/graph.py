@@ -31,10 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_net_spark.queries import query
 from flink_net_spark.tables import (
-    checkpoint_tracked_lazy,
+    BuildScope,
     derived_shuffle_partitions,
     load_table,
-    release_rdds_with_result,
     scoped_persist,
     scoped_shuffle_partitions,
 )
@@ -629,29 +628,23 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (tools/exp_iter_parts.py, result fingerprints identical):
     # 6.60 → 3.36 s warm median.  MIN-over-BIGINT label algebra is
     # partition-count-independent by construction.
-    with scoped_shuffle_partitions(
+    with BuildScope() as scope, scoped_shuffle_partitions(
         spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
     ):
-        edges = (
+        edges = scope.persist(
             pairs.union(
                 pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(F.col("src"))
-            .persist()
+            ).repartition(F.col("src"))
         )
         # Lazy checkpoints: no per-round count() forces materialization, so
-        # EVERY round's label cache backs the final plan — track their RDD ids
-        # and tie release to the result handle (the dedup_resolve_groups
-        # discipline; untracked, they leak at the RDD layer for the session —
-        # r13 ADVICE).
-        cc_ids: list[int] = []
-        l = checkpoint_tracked_lazy(
+        # EVERY round's label cache backs the final plan and is bound to the
+        # result handle (untracked, they leak at the RDD layer for the
+        # session — r13 ADVICE).
+        l = scope.checkpoint(
             edges.select(F.col("src").alias("node"))
             .distinct()
-            .select("node", F.col("node").alias("lbl")),
-            cc_ids,
+            .select("node", F.col("node").alias("lbl"))
         )
-        persisted = [edges]
         prev = l
         for _ in range(CC_ROUNDS):
             prev = l
@@ -664,56 +657,49 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.min("slbl").alias("nmin"))
                 .withColumnRenamed("dst", "node")
             )
-            m = (
-                l.join(nb, "node", "left")
-                .select(
+            m = scope.persist(
+                l.join(nb, "node", "left").select(
                     "node",
                     F.least(F.col("lbl"), F.coalesce("nmin", "lbl")).alias("ml"),
                 )
-                .persist()
             )
             j = m.select(F.col("node").alias("jn"), F.col("ml").alias("jl"))
-            l = checkpoint_tracked_lazy(
-                m.join(j, m.ml == j.jn, "left")
-                .select(
+            l = scope.checkpoint(
+                m.join(j, m.ml == j.jn, "left").select(
                     "node",
                     F.least(F.col("ml"), F.coalesce("jl", "ml")).alias("lbl"),
-                ),
-                cc_ids,
+                )
             )
-            persisted.append(m)
-    chg = (
-        l.select("node", "lbl")
-        .join(prev.select("node", F.col("lbl").alias("plbl")), "node")
-        .filter(F.col("lbl") != F.col("plbl"))
-        .agg(F.count(F.lit(1)).alias("n_unconverged"))
-    )
-    comp = l.groupBy(F.col("lbl").alias("component")).agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0)).alias("n_part"),
-        F.sum(F.when(F.col("node") % 2 == 1, 1).otherwise(0)).alias("n_supplier"),
-    )
-    out = (
-        comp.crossJoin(F.broadcast(chg))
-        .groupBy(
-            F.col("n_nodes").cast("long").alias("size"),
-            F.col("n_unconverged").cast("long").alias("n_unconverged"),
+        chg = (
+            l.select("node", "lbl")
+            .join(prev.select("node", F.col("lbl").alias("plbl")), "node")
+            .filter(F.col("lbl") != F.col("plbl"))
+            .agg(F.count(F.lit(1)).alias("n_unconverged"))
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_components"),
-            F.sum("component").alias("sum_label"),
-            F.sum("n_part").cast("long").alias("n_part"),
-            F.sum("n_supplier").cast("long").alias("n_supplier"),
+        comp = l.groupBy(F.col("lbl").alias("component")).agg(
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.sum(F.when(F.col("node") % 2 == 0, 1).otherwise(0)).alias("n_part"),
+            F.sum(F.when(F.col("node") % 2 == 1, 1).otherwise(0)).alias("n_supplier"),
         )
-        .select(
-            "size", "n_components", "sum_label", "n_part", "n_supplier",
-            "n_unconverged",
+        out = (
+            comp.crossJoin(F.broadcast(chg))
+            .groupBy(
+                F.col("n_nodes").cast("long").alias("size"),
+                F.col("n_unconverged").cast("long").alias("n_unconverged"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_components"),
+                F.sum("component").alias("sum_label"),
+                F.sum("n_part").cast("long").alias("n_part"),
+                F.sum("n_supplier").cast("long").alias("n_supplier"),
+            )
+            .select(
+                "size", "n_components", "sum_label", "n_part", "n_supplier",
+                "n_unconverged",
+            )
+            .orderBy("size")
         )
-        .orderBy("size")
-    )
-    return release_rdds_with_result(
-        scoped_persist(out, *persisted), spark, cc_ids
-    )
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -977,25 +963,22 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints identical):
     # 5.79 → 3.20 s warm median.  MIN-over-BIGINT relaxation is
     # partition-count-independent by construction.
-    with scoped_shuffle_partitions(
+    with BuildScope() as scope, scoped_shuffle_partitions(
         spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
     ):
-        edges = (
+        edges = scope.persist(
             pw.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
             .union(pw.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
             .repartition(F.col("src"))
-            .persist()
         )
-        ck_ids: list[int] = []
-        dist = checkpoint_tracked_lazy(
+        dist = scope.checkpoint(
             edges.filter(
                 (F.col("src") % 2 == 0)
                 & (F.expr("src div 2") % SSSP_SEED_MOD == 1)
             )
             .select(F.col("src").alias("node"))
             .distinct()
-            .withColumn("dist", F.lit(0).cast("long")),
-            ck_ids,
+            .withColumn("dist", F.lit(0).cast("long"))
         )
         prev = dist
         for _ in range(SSSP_HOPS):
@@ -1004,37 +987,36 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 edges.join(dist.withColumnRenamed("node", "src"), "src")
                 .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             )
-            dist = checkpoint_tracked_lazy(
-                dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist")),
-                ck_ids,
+            dist = scope.checkpoint(
+                dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist"))
             )
-    chg = (
-        dist.join(
-            prev.select("node", F.col("dist").alias("pdist")), "node", "left"
+        chg = (
+            dist.join(
+                prev.select("node", F.col("dist").alias("pdist")), "node", "left"
+            )
+            .filter(F.col("pdist").isNull() | (F.col("dist") < F.col("pdist")))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_improved_last"))
         )
-        .filter(F.col("pdist").isNull() | (F.col("dist") < F.col("pdist")))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_improved_last"))
-    )
-    out = (
-        dist.groupBy(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("dist div 10").alias("dist_bucket"),
+        out = (
+            dist.groupBy(
+                F.when(F.col("node") % 2 == 0, F.lit("part"))
+                .otherwise(F.lit("supplier"))
+                .alias("kind"),
+                F.expr("dist div 10").alias("dist_bucket"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.sum("dist").cast("long").alias("sum_dist"),
+                F.sum(F.expr("node div 2")).cast("long").alias("sum_key"),
+            )
+            .crossJoin(F.broadcast(chg))
+            .select(
+                "kind", "dist_bucket", "n_nodes", "sum_dist", "sum_key",
+                "n_improved_last",
+            )
+            .orderBy("kind", "dist_bucket")
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum("dist").cast("long").alias("sum_dist"),
-            F.sum(F.expr("node div 2")).cast("long").alias("sum_key"),
-        )
-        .crossJoin(F.broadcast(chg))
-        .select(
-            "kind", "dist_bucket", "n_nodes", "sum_dist", "sum_key",
-            "n_improved_last",
-        )
-        .orderBy("kind", "dist_bucket")
-    )
-    return release_rdds_with_result(scoped_persist(out, edges), spark, ck_ids)
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -1128,58 +1110,55 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_partkey") * 2).cast("long").alias("s"),
         (F.col("l_suppkey") * 2 + 1).cast("long").alias("d"),
     ).distinct()
-    edges = (
-        pairs.union(pairs.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .repartition(F.col("s"))
-        .persist()
-    )
-    ck_ids: list[int] = []
-    alive = checkpoint_tracked_lazy(
-        edges.select(F.col("s").alias("node")).distinct(), ck_ids
-    )
-    prev = alive
-    for _ in range(KCORE_ROUNDS):
+    with BuildScope() as scope:
+        edges = scope.persist(
+            pairs.union(
+                pairs.select(F.col("d").alias("s"), F.col("s").alias("d"))
+            ).repartition(F.col("s"))
+        )
+        alive = scope.checkpoint(edges.select(F.col("s").alias("node")).distinct())
         prev = alive
-        alive = checkpoint_tracked_lazy(
+        for _ in range(KCORE_ROUNDS):
+            prev = alive
+            alive = scope.checkpoint(
+                edges.join(alive.withColumnRenamed("node", "s"), "s")
+                .join(alive.withColumnRenamed("node", "d"), "d")
+                .groupBy("s")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .filter(F.col("deg") >= KCORE_K)
+                .select(F.col("s").alias("node"))
+            )
+        chg = (
+            prev.agg(F.count(F.lit(1)).alias("np"))
+            .crossJoin(F.broadcast(alive.agg(F.count(F.lit(1)).alias("nh"))))
+            .select((F.col("np") - F.col("nh")).cast("long").alias("n_removed_last"))
+        )
+        core_deg = (
             edges.join(alive.withColumnRenamed("node", "s"), "s")
             .join(alive.withColumnRenamed("node", "d"), "d")
             .groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select(F.col("s").alias("node")),
-            ck_ids,
+            .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
         )
-    chg = (
-        prev.agg(F.count(F.lit(1)).alias("np"))
-        .crossJoin(F.broadcast(alive.agg(F.count(F.lit(1)).alias("nh"))))
-        .select((F.col("np") - F.col("nh")).cast("long").alias("n_removed_last"))
-    )
-    core_deg = (
-        edges.join(alive.withColumnRenamed("node", "s"), "s")
-        .join(alive.withColumnRenamed("node", "d"), "d")
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-    )
-    out = (
-        core_deg.groupBy(
-            F.when(F.col("s") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind")
+        out = (
+            core_deg.groupBy(
+                F.when(F.col("s") % 2 == 0, F.lit("part"))
+                .otherwise(F.lit("supplier"))
+                .alias("kind")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.sum(F.expr("s div 2")).cast("long").alias("sum_key"),
+                F.sum("core_deg").cast("long").alias("sum_core_deg"),
+                F.max("core_deg").cast("long").alias("max_core_deg"),
+            )
+            .crossJoin(F.broadcast(chg))
+            .select(
+                "kind", "n_nodes", "sum_key", "sum_core_deg", "max_core_deg",
+                "n_removed_last",
+            )
+            .orderBy("kind")
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr("s div 2")).cast("long").alias("sum_key"),
-            F.sum("core_deg").cast("long").alias("sum_core_deg"),
-            F.max("core_deg").cast("long").alias("max_core_deg"),
-        )
-        .crossJoin(F.broadcast(chg))
-        .select(
-            "kind", "n_nodes", "sum_key", "sum_core_deg", "max_core_deg",
-            "n_removed_last",
-        )
-        .orderBy("kind")
-    )
-    return release_rdds_with_result(scoped_persist(out, edges), spark, ck_ids)
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -1300,18 +1279,16 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loop — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints
     # identical): 3.77 → 2.70 s warm median.  The mode vote is a COUNT
     # plus a total-order tie-break — partition-count-independent.
-    with scoped_shuffle_partitions(
+    with BuildScope() as scope, scoped_shuffle_partitions(
         spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
     ):
-        edges = (
-            pairs.union(pairs.select(F.col("d").alias("s"), F.col("s").alias("d")))
-            .repartition(F.col("s"))
-            .persist()
+        edges = scope.persist(
+            pairs.union(
+                pairs.select(F.col("d").alias("s"), F.col("s").alias("d"))
+            ).repartition(F.col("s"))
         )
-        ck_ids: list[int] = []
-        labels = checkpoint_tracked_lazy(
-            edges.select(F.col("s").alias("node"), F.col("s").alias("lbl")).distinct(),
-            ck_ids,
+        labels = scope.checkpoint(
+            edges.select(F.col("s").alias("node"), F.col("s").alias("lbl")).distinct()
         )
         prev = labels
         rank = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("nl"))
@@ -1334,37 +1311,37 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .filter(F.col("rn") == 1)
                     .select("node", F.col("nl").alias("lbl"))
                 )
-                labels = checkpoint_tracked_lazy(
-                    upd.union(labels.filter(F.col("node") % 2 == 1 - color)), ck_ids
+                labels = scope.checkpoint(
+                    upd.union(labels.filter(F.col("node") % 2 == 1 - color))
                 )
-    chg = (
-        labels.select("node", "lbl")
-        .join(prev.select("node", F.col("lbl").alias("pl")), "node")
-        .filter(F.col("lbl") != F.col("pl"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_changed_last"))
-    )
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    out = (
-        labels.join(sizes, "lbl")
-        .groupBy(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind")
+        chg = (
+            labels.select("node", "lbl")
+            .join(prev.select("node", F.col("lbl").alias("pl")), "node")
+            .filter(F.col("lbl") != F.col("pl"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_changed_last"))
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.countDistinct("lbl").cast("long").alias("n_communities"),
-            F.sum(F.expr("lbl div 2")).cast("long").alias("sum_label_key"),
-            F.max("sz").cast("long").alias("max_comm_size"),
+        sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("sz"))
+        out = (
+            labels.join(sizes, "lbl")
+            .groupBy(
+                F.when(F.col("node") % 2 == 0, F.lit("part"))
+                .otherwise(F.lit("supplier"))
+                .alias("kind")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_nodes"),
+                F.countDistinct("lbl").cast("long").alias("n_communities"),
+                F.sum(F.expr("lbl div 2")).cast("long").alias("sum_label_key"),
+                F.max("sz").cast("long").alias("max_comm_size"),
+            )
+            .crossJoin(F.broadcast(chg))
+            .select(
+                "kind", "n_nodes", "n_communities", "sum_label_key",
+                "max_comm_size", "n_changed_last",
+            )
+            .orderBy("kind")
         )
-        .crossJoin(F.broadcast(chg))
-        .select(
-            "kind", "n_nodes", "n_communities", "sum_label_key",
-            "max_comm_size", "n_changed_last",
-        )
-        .orderBy("kind")
-    )
-    return release_rdds_with_result(scoped_persist(out, edges), spark, ck_ids)
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -1629,154 +1606,141 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from flink_net_spark.tables import attach_release
-
-    ckdir = tempfile.mkdtemp(prefix="fns_msf_")
-
-    def ckpt(df: DataFrame, tag: str) -> DataFrame:
-        path = os.path.join(ckdir, tag)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    li = load_table(spark, sf_dir, "lineitem").filter(MSF_EDGE_FILTER)
-    ew = (
-        li.groupBy(
-            (F.col("l_partkey") * 2).cast("long").alias("a"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
-        )
-        .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
-        .select(
-            F.least("a", "b").alias("mu"), F.greatest("a", "b").alias("mx"), "w"
-        )
-    )
-    ed = (
-        ew.select(F.col("mu").alias("u"), F.col("mx").alias("v"), "w", "mu", "mx")
-        .union(
-            ew.select(
-                F.col("mx").alias("u"), F.col("mu").alias("v"), "w", "mu", "mx"
-            )
-        )
-        .repartition(F.col("u"))
-        .persist()
-    )
-    l = ckpt(
-        ed.select(F.col("u").alias("node")).distinct().select(
-            "node", F.col("node").alias("lbl")
-        ),
-        "l0",
-    )
-    rank = Window.partitionBy("c").orderBy("w", "mu", "mx")
-    msts = []
-    for r in range(MSF_ROUNDS):
-        cand = (
-            ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-            .join(
-                l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v"
-            )
-            .filter(F.col("c") != F.col("oc"))
-            .select("c", "oc", "w", "mu", "mx")
-        )
-        pick = ckpt(
-            cand.withColumn("rn", F.row_number().over(rank))
-            .filter(F.col("rn") == 1)
-            .select("c", "oc", "w", "mu", "mx"),
-            f"pick{r}",
-        )
-        msts.append(pick.select("mu", "mx", "w"))
-        # merge map over ALL live labels: chosen target, 2-cycles to the
-        # smaller label, pick-less components map to themselves
-        q = pick.select(F.col("c").alias("qc"), F.col("oc").alias("qoc"))
-        pm = ckpt(
-            l.select("lbl")
-            .distinct()
-            .join(pick, F.col("lbl") == F.col("c"), "left")
-            .join(q, F.col("oc") == F.col("qc"), "left")
-            .select(
-                F.col("lbl").alias("c"),
-                F.coalesce(
-                    F.when(
-                        F.col("qoc") == F.col("c"),
-                        F.least(F.col("c"), F.col("oc")),
-                    ).otherwise(F.col("oc")),
-                    F.col("lbl"),
-                ).alias("p"),
-            ),
-            f"pm{r}",
-        )
-        # jumps stay plan-only: each doubles the pm-leaf count (2^JUMPS = 8
-        # references to one file relation — cheap and lineage-free)
-        for _j in range(MSF_JUMPS):
-            pm = pm.join(
-                pm.select(F.col("c").alias("c2"), F.col("p").alias("p2")),
-                F.col("p") == F.col("c2"),
-            ).select("c", F.col("p2").alias("p"))
-        l = ckpt(
-            l.join(pm, l.lbl == pm.c).select("node", F.col("p").alias("lbl")),
-            f"l{r + 1}",
-        )
-    mst = msts[0]
-    for m in msts[1:]:
-        mst = mst.union(m)
-    mst = mst.distinct()
-    # r15 ADVICE (medium): a merge chain deeper than 2^MSF_JUMPS would
-    # leave the merge map partially collapsed, let a same-component edge
-    # into the forest, and STILL read n_cross_last = 0 — and the DuckDB
-    # oracle unrolls the identical scheme, so cross-engine equality
-    # cannot catch it.  The forest invariant |MSF| == n_nodes −
-    # n_components is independent of the jump scheme, so check it HERE
-    # at build time over the already-materialized parquet rounds (tiny
-    # frames; two sub-second jobs) and raise instead of ever returning a
-    # silently-wrong forest.
-    n_nodes_v, n_comp_v = l.agg(
-        F.count(F.lit(1)), F.countDistinct("lbl")
-    ).first()
-    n_mst_v = mst.count()
-    if n_mst_v != n_nodes_v - n_comp_v:
-        shutil.rmtree(ckdir, ignore_errors=True)
-        try:
-            # r16 ADVICE: no release handle is attached yet on this path,
-            # so the persisted edge frame would leak for the session
-            ed.unpersist()
-        except Exception:
-            pass
-        raise AssertionError(
-            f"graph_msf_boruvka forest invariant violated: |MSF|={n_mst_v} "
-            f"!= n_nodes={n_nodes_v} - n_components={n_comp_v} — merge-path "
-            f"depth exceeded the 2^{MSF_JUMPS} pointer-jump budget"
-        )
-    aud = (
-        ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-        .join(l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v")
-        .filter(F.col("c") != F.col("oc"))
-        .agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
-    )
-    nstats = l.agg(
-        F.countDistinct("lbl").cast("long").alias("n_components"),
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-    )
-    aud = aud.crossJoin(F.broadcast(nstats))
-    out = (
-        mst.groupBy(F.expr("w div 5").alias("w_bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_edges"),
-            F.sum("w").cast("long").alias("sum_w"),
-            F.sum(F.expr("mu div 2")).cast("long").alias("sum_lo_key"),
-            F.sum(F.expr("mx div 2")).cast("long").alias("sum_hi_key"),
-        )
-        .crossJoin(F.broadcast(aud))
-        .select(
-            "w_bucket", "n_edges", "sum_w", "sum_lo_key", "sum_hi_key",
-            "n_components", "n_nodes", "n_cross_last",
-        )
-        .orderBy("w_bucket")
-    )
-    out = scoped_persist(out, ed)
     # r15 VERDICT #1a: the ckpt dir must not strand /tmp when a caller
-    # drops the handle without release_persisted — a weakref.finalize is
-    # BOTH the explicit-release handle (attach_release composes it) and
-    # the GC backstop (it fires when the result handle is collected),
-    # and it is idempotent so the double path is safe.
-    import weakref
+    # drops the handle without release_persisted — its removal rides the
+    # result's release list, GC backstop included, and the scope removes it
+    # itself if the build raises.
+    with BuildScope() as scope:
+        ckdir = tempfile.mkdtemp(prefix="fns_msf_")
+        scope.on_release(shutil.rmtree, ckdir, True)
 
-    attach_release(out, weakref.finalize(out, shutil.rmtree, ckdir, True))
-    return out
+        def ckpt(df: DataFrame, tag: str) -> DataFrame:
+            path = os.path.join(ckdir, tag)
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.parquet(path)
+
+        li = load_table(spark, sf_dir, "lineitem").filter(MSF_EDGE_FILTER)
+        ew = (
+            li.groupBy(
+                (F.col("l_partkey") * 2).cast("long").alias("a"),
+                (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
+            )
+            .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
+            .select(
+                F.least("a", "b").alias("mu"), F.greatest("a", "b").alias("mx"), "w"
+            )
+        )
+        ed = scope.persist(
+            ew.select(F.col("mu").alias("u"), F.col("mx").alias("v"), "w", "mu", "mx")
+            .union(
+                ew.select(
+                    F.col("mx").alias("u"), F.col("mu").alias("v"), "w", "mu", "mx"
+                )
+            )
+            .repartition(F.col("u"))
+        )
+        l = ckpt(
+            ed.select(F.col("u").alias("node")).distinct().select(
+                "node", F.col("node").alias("lbl")
+            ),
+            "l0",
+        )
+        rank = Window.partitionBy("c").orderBy("w", "mu", "mx")
+        msts = []
+        for r in range(MSF_ROUNDS):
+            cand = (
+                ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
+                .join(
+                    l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v"
+                )
+                .filter(F.col("c") != F.col("oc"))
+                .select("c", "oc", "w", "mu", "mx")
+            )
+            pick = ckpt(
+                cand.withColumn("rn", F.row_number().over(rank))
+                .filter(F.col("rn") == 1)
+                .select("c", "oc", "w", "mu", "mx"),
+                f"pick{r}",
+            )
+            msts.append(pick.select("mu", "mx", "w"))
+            # merge map over ALL live labels: chosen target, 2-cycles to the
+            # smaller label, pick-less components map to themselves
+            q = pick.select(F.col("c").alias("qc"), F.col("oc").alias("qoc"))
+            pm = ckpt(
+                l.select("lbl")
+                .distinct()
+                .join(pick, F.col("lbl") == F.col("c"), "left")
+                .join(q, F.col("oc") == F.col("qc"), "left")
+                .select(
+                    F.col("lbl").alias("c"),
+                    F.coalesce(
+                        F.when(
+                            F.col("qoc") == F.col("c"),
+                            F.least(F.col("c"), F.col("oc")),
+                        ).otherwise(F.col("oc")),
+                        F.col("lbl"),
+                    ).alias("p"),
+                ),
+                f"pm{r}",
+            )
+            # jumps stay plan-only: each doubles the pm-leaf count (2^JUMPS = 8
+            # references to one file relation — cheap and lineage-free)
+            for _j in range(MSF_JUMPS):
+                pm = pm.join(
+                    pm.select(F.col("c").alias("c2"), F.col("p").alias("p2")),
+                    F.col("p") == F.col("c2"),
+                ).select("c", F.col("p2").alias("p"))
+            l = ckpt(
+                l.join(pm, l.lbl == pm.c).select("node", F.col("p").alias("lbl")),
+                f"l{r + 1}",
+            )
+        mst = msts[0]
+        for m in msts[1:]:
+            mst = mst.union(m)
+        mst = mst.distinct()
+        # r15 ADVICE (medium): a merge chain deeper than 2^MSF_JUMPS would
+        # leave the merge map partially collapsed, let a same-component edge
+        # into the forest, and STILL read n_cross_last = 0 — and the DuckDB
+        # oracle unrolls the identical scheme, so cross-engine equality
+        # cannot catch it.  The forest invariant |MSF| == n_nodes −
+        # n_components is independent of the jump scheme, so check it HERE
+        # at build time over the already-materialized parquet rounds (tiny
+        # frames; two sub-second jobs) and raise instead of ever returning a
+        # silently-wrong forest.
+        n_nodes_v, n_comp_v = l.agg(
+            F.count(F.lit(1)), F.countDistinct("lbl")
+        ).first()
+        n_mst_v = mst.count()
+        if n_mst_v != n_nodes_v - n_comp_v:
+            raise AssertionError(
+                f"graph_msf_boruvka forest invariant violated: |MSF|={n_mst_v} "
+                f"!= n_nodes={n_nodes_v} - n_components={n_comp_v} — merge-path "
+                f"depth exceeded the 2^{MSF_JUMPS} pointer-jump budget"
+            )
+        aud = (
+            ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
+            .join(l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v")
+            .filter(F.col("c") != F.col("oc"))
+            .agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
+        )
+        nstats = l.agg(
+            F.countDistinct("lbl").cast("long").alias("n_components"),
+            F.count(F.lit(1)).cast("long").alias("n_nodes"),
+        )
+        aud = aud.crossJoin(F.broadcast(nstats))
+        out = (
+            mst.groupBy(F.expr("w div 5").alias("w_bucket"))
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_edges"),
+                F.sum("w").cast("long").alias("sum_w"),
+                F.sum(F.expr("mu div 2")).cast("long").alias("sum_lo_key"),
+                F.sum(F.expr("mx div 2")).cast("long").alias("sum_hi_key"),
+            )
+            .crossJoin(F.broadcast(aud))
+            .select(
+                "w_bucket", "n_edges", "sum_w", "sum_lo_key", "sum_hi_key",
+                "n_components", "n_nodes", "n_cross_last",
+            )
+            .orderBy("w_bucket")
+        )
+        return scope.bind(out)

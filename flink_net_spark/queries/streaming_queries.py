@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from flink_net_spark.queries import query
 from flink_net_spark.sources import replay_table_as_stream
 from flink_net_spark.streaming import session, tumbling, with_bounded_out_of_orderness
+from flink_net_spark.tables import env_positive_int, scoped_shuffle_partitions
 
 HOUR_MS = 3_600_000
 
@@ -70,11 +71,10 @@ def _write_marker_atomic(path: str, content: str) -> None:
 
 
 def _inc_state_shards(n_band_rows: int) -> int:
-    env = os.environ.get("SPARK_GRAFT_INC_STATE_SHARDS")
-    if env:
-        return int(env)
-    n = max(1, n_band_rows // _INC_TARGET_BUCKETS_PER_SHARD)
-    return max(_INC_SHARDS_MIN, min(_INC_SHARDS_MAX, 1 << (n.bit_length() - 1)))
+    n = env_positive_int("SPARK_GRAFT_INC_STATE_SHARDS")
+    if n is None:
+        n = 1 << (max(1, n_band_rows // _INC_TARGET_BUCKETS_PER_SHARD).bit_length() - 1)
+    return max(_INC_SHARDS_MIN, min(_INC_SHARDS_MAX, n))
 
 
 def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
@@ -156,16 +156,12 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
     post-processing is unaffected.  At real scale this knob is sized to
     state volume, not left at the session default.
     """
+    # env-overridable for cluster sizing (state volume), default 8 (above)
+    parts = env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS") or 8
     spark = df.sparkSession
     table = f"fns_mem_{uuid.uuid4().hex[:10]}"
     ckpt = tempfile.mkdtemp(prefix="fns_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # env-overridable for cluster sizing (state volume), default 8 (above)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
-    )
-    try:
+    with scoped_shuffle_partitions(spark, parts):
         q = (
             df.writeStream.format("memory")
             .queryName(table)
@@ -176,8 +172,6 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(30)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(table)
 
 
@@ -892,12 +886,8 @@ def stream_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="fns_cdc_snap_")
     ckpt = tempfile.mkdtemp(prefix="fns_cdc_ckpt_")
     sink = UpsertSink(out_dir, ("user_id",), "event_id")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_shuffle_partitions(spark, 8):
         run_to_completion(sink.writer(ev, ckpt))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         sink.snapshot(spark)
         .select(

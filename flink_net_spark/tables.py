@@ -6,9 +6,12 @@ documents embeddings — one parquet file each under a scale-factor dir.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
+import weakref
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = [
@@ -39,15 +42,36 @@ def table_disk_bytes(sf_dir: str, name: str) -> int:
     adaptive plan and EXECUTES its pending exchanges as a side-effect job
     (measured: one full extra spread exchange per call on the single-file
     layout), a stat costs nothing and scales with the corpus, not the
-    layout."""
+    layout.  A directory counts only its ``*.parquet`` parts, not
+    ``_SUCCESS`` markers or ``.crc`` sidecars; a missing table is 0."""
     p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _d, files in os.walk(p)
-            for f in files
-        )
-    return os.path.getsize(p) if os.path.exists(p) else 0
+    try:
+        if os.path.isdir(p):
+            return sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _d, files in os.walk(p)
+                for f in files
+                if f.endswith(".parquet")
+            )
+        return os.path.getsize(p)
+    except OSError:
+        return 0
+
+
+def env_positive_int(name: str) -> int | None:
+    """The positive integer in env var ``name``, or None when it is unset
+    or empty.  Any other value raises a ValueError that names the variable
+    — a sizing knob of 0 would fail at plan time or corrupt a modulus."""
+    raw = os.environ.get(name)
+    if not raw:
+        return None
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(f"{name}={raw!r}: expected a positive integer")
+    return n
 
 
 # Runtime-settable SQLConfs required to read the testdata parquet correctly.
@@ -135,22 +159,28 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     return dfs
 
 
-# Live refcounts for scoped persists, keyed by the SEMANTIC plan hash.
-# Spark's CacheManager is keyed by logical plan, not by Python handle: two
-# invocations of the same query builder produce distinct DataFrame objects
-# backed by ONE cache entry, so a per-handle unpersist (the r8→r9 design)
-# could evict a cache another live result still depends on the moment any
-# earlier handle was GC'd (r9 ADVICE minor).  Refcounting on the semantic
-# hash releases the cache only when the LAST scoped result is done with it.
+# Cache lifetime — one owner per builder.  Everything a query builder
+# creates for its result (persisted frames, localCheckpoints, temp dirs, an
+# upstream result it builds on) is created through a ``BuildScope``, which
+# owns it until ``bind(result)`` moves it onto the result's release list.
+# That list runs once: on ``release_persisted(result)`` (deterministic —
+# what bench.py calls after collect) or, as a backstop, from a
+# ``weakref.finalize`` when the result handle is collected.  A builder that
+# raises inside ``with BuildScope()`` releases what it owned.
 #
-# r17 (VERDICT r16 #5): mutations are guarded by _PLAN_REFS_LOCK — the
-# sim_ann_planted_recall legs build on a 4-thread pool, and the bare
-# read-modify-write `ent[0] += 1` can interleave at bytecode boundaries; a
-# lost increment would unpersist a cache another live result still uses
-# (silent recompute).  The lock covers bookkeeping only; py4j calls
-# (semanticHash, unpersist) stay outside it.
+# Persisted frames are refcounted by SEMANTIC plan hash: Spark's
+# CacheManager keys caches by logical plan, so two builds of one
+# intermediate (dedup_minhash_lsh and dedup_resolve_groups share the
+# shingle cache) are backed by ONE cache entry, which is unpersisted only
+# when its last holder releases it.  Acquire and release run entirely
+# under _PLAN_REFS_LOCK, py4j calls included, so a release can never
+# unpersist a cache a concurrent acquire has just taken (the
+# sim_ann_planted_recall legs build on a thread pool).  The lock is
+# re-entrant because a finalizer runs on whichever thread triggers the GC,
+# possibly one that already holds it; for the same reason the refcount is
+# moved before any py4j call.
 _PLAN_REFS: dict[int, list] = {}  # key -> [refcount, DataFrame handle]
-_PLAN_REFS_LOCK = threading.Lock()
+_PLAN_REFS_LOCK = threading.RLock()
 
 
 def _plan_key(df: DataFrame) -> int:
@@ -160,93 +190,116 @@ def _plan_key(df: DataFrame) -> int:
         return id(df)
 
 
-def acquire_persisted(*cached: DataFrame) -> list[int]:
-    """Register a refcounted use of already-persisted DataFrames and return
-    the plan keys.  For builders whose use of a shared cache ends MID-query
-    (e.g. an eager iterative loop) rather than with the returned result:
-    pair with ``release_acquired(keys)`` instead of calling ``unpersist()``
-    directly, so a semantically-identical cache scoped to another live
-    result (same _PLAN_REFS key) is not evicted out from under it."""
-    keys = []
-    for df in cached:
-        k = _plan_key(df)  # py4j round trip — outside the lock
-        with _PLAN_REFS_LOCK:
-            ent = _PLAN_REFS.setdefault(k, [0, df])
-            ent[0] += 1
-        keys.append(k)
-    return keys
+def _unref(key: int) -> None:
+    with _PLAN_REFS_LOCK:
+        ent = _PLAN_REFS.get(key)
+        if ent is None:
+            return
+        ent[0] -= 1
+        if ent[0] <= 0:
+            del _PLAN_REFS[key]
+            ent[1].unpersist()
 
 
-def release_acquired(keys: list[int]) -> None:
-    """Drop one refcount per key; unpersist a cache only when the LAST
-    scoped user releases it (idempotent against missing keys)."""
-    for k in keys:
-        to_unpersist = None
-        with _PLAN_REFS_LOCK:
-            ent = _PLAN_REFS.get(k)
-            if ent is None:
-                continue
-            ent[0] -= 1
-            if ent[0] <= 0:
-                _PLAN_REFS.pop(k, None)
-                to_unpersist = ent[1]
-        if to_unpersist is not None:
+class _ReleaseList(list):
+    """``(owner, fn, args)`` release steps, each run at most once, newest
+    first.  Exception-safe: on a stopped session nothing is left to free."""
+
+    def __call__(self) -> None:
+        while True:
             try:
-                to_unpersist.unpersist()  # py4j — outside the lock
+                _owner, fn, args = self.pop()
+            except IndexError:  # empty, or drained by a concurrent caller
+                return
+            try:
+                fn(*args)
             except Exception:
                 pass
 
 
+class BuildScope:
+    """Owner of the caches and clean-ups one query builder creates.
+
+    ``persist`` and ``checkpoint`` return the frame they were given or
+    created; ``release`` frees owned frames early (superseded loop rounds);
+    ``on_release`` adds a clean-up step; ``bind(result)`` hands everything
+    still owned to ``result``.  Leaving the ``with`` block releases whatever
+    was not bound — on success that is nothing, on an exception it is
+    everything."""
+
+    def __init__(self) -> None:
+        self._owned = _ReleaseList()
+
+    def __enter__(self) -> BuildScope:
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        self._owned()
+        return False
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` (a no-op when its plan is already cached) and
+        hold one refcount on the cache."""
+        key = _plan_key(df)  # py4j round trip — outside the lock
+        with _PLAN_REFS_LOCK:
+            ent = _PLAN_REFS.get(key)
+            if ent is not None:
+                ent[0] += 1  # a registered cache is live until its last release
+            else:
+                _PLAN_REFS[key] = [1, df]
+            self._owned.append((df, _unref, (key,)))
+            if ent is None and df.storageLevel == StorageLevel.NONE:
+                df.persist()
+        return df
+
+    def checkpoint(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """``df.localCheckpoint(eager)``.  Its cache lives at the RDD layer,
+        invisible to DataFrame.unpersist; the checkpoint's own LogicalRDD
+        names the one RDD to unpersist on release."""
+        lc = df.localCheckpoint(eager=eager)
+        rdd = lc._jdf.queryExecution().logical().rdd()
+        self._owned.append((lc, rdd.unpersist, (False,)))
+        return lc
+
+    def on_release(self, fn, *args) -> None:
+        self._owned.append((None, fn, args))
+
+    def release(self, *frames: DataFrame) -> None:
+        ids = {id(f) for f in frames}
+        done = _ReleaseList(s for s in self._owned if id(s[0]) in ids)
+        self._owned[:] = [s for s in self._owned if id(s[0]) not in ids]
+        done()
+
+    def bind(self, result: DataFrame) -> DataFrame:
+        """Move every owned item onto ``result``'s release list (created on
+        first bind, with its ``weakref.finalize`` backstop) and return it.
+        Owners are dropped so the list never pins ``result`` itself."""
+        steps = getattr(result, "_fns_release", None)
+        if steps is None:
+            steps = result._fns_release = _ReleaseList()
+            weakref.finalize(result, steps)
+        steps.extend((None, fn, args) for _o, fn, args in self._owned)
+        self._owned.clear()
+        return result
+
+
 def scoped_persist(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie persisted intermediates' cache lifetime to the RESULT handle.
-
-    Query builders persist a shared intermediate (e.g. a tokenized
-    transition stream feeding both an LM build and a join-back) and return
-    a lazy DataFrame; there is no post-action hook to unpersist, so the
-    cache used to live for the whole session (r8 ADVICE minor).  The
-    persisted inputs are refcounted by semantic plan hash (see _PLAN_REFS)
-    and released when the last result scoped to them is dropped — either
-    explicitly via ``release_persisted(result)`` (preferred: deterministic,
-    what bench.py and the driver-sim call after collect) or by the GC
-    finalizer as a backstop.  Non-blocking and exception-safe — if the
-    session is already gone there is nothing left to free."""
-    import weakref
-
-    keys = acquire_persisted(*cached)
-    fin = weakref.finalize(result, release_acquired, keys)
-    # Explicit-release handle: weakref.finalize objects are idempotent
-    # callables, so release_persisted() after collect() is deterministic
-    # and the GC backstop then no-ops.  Consumers that transform `result`
-    # first simply fall back to the GC path (release_persisted degrades to
-    # a no-op on DataFrames without the handle).
-    attach_release(result, fin)
-    return result
-
-
-def attach_release(result: DataFrame, fin) -> None:
-    """Attach ``fin`` to ``result._fns_release``, COMPOSING with any
-    release already attached (scoped_persist / release_rdds_with_result /
-    query-level upstream pins stack in any call order — round-14 review:
-    an unconditional overwrite silently dropped the earlier handle when
-    the helpers were nested the other way around)."""
-    prev = getattr(result, "_fns_release", None)
-    if prev is None:
-        result._fns_release = fin
-        return
-
-    def _both(prev=prev, fin=fin):
-        prev()
-        fin()
-
-    result._fns_release = _both
+    """Tie persisted intermediates' cache lifetime to the RESULT handle:
+    the one-line ``BuildScope`` for single-pass builders, which persist a
+    shared intermediate and return a lazy DataFrame with no post-action
+    hook to unpersist it."""
+    with BuildScope() as scope:
+        for df in cached:
+            scope.persist(df)
+        return scope.bind(result)
 
 
 def release_persisted(result: DataFrame) -> None:
-    """Deterministically release the caches scoped to ``result`` by
-    ``scoped_persist`` (idempotent; no-op for unscoped DataFrames)."""
-    fin = getattr(result, "_fns_release", None)
-    if fin is not None:
-        fin()
+    """Deterministically run ``result``'s release list (idempotent; a
+    no-op for DataFrames nothing was bound to)."""
+    steps = getattr(result, "_fns_release", None)
+    if steps is not None:
+        steps()
 
 
 # r17 (VERDICT r16 #3, guide §2.2): iterative builders (CC/SSSP/LPA/
@@ -267,131 +320,25 @@ _ITER_PART_FLOOR = 4
 
 
 def derived_shuffle_partitions(sf_dir: str, tables: list[str]) -> int:
-    env = os.environ.get("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS")
+    env = env_positive_int("SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS")
     if env:
-        return int(env)
-    total = 0
-    for t in tables:
-        p = table_path(sf_dir, t)
-        try:
-            if os.path.isdir(p):
-                # directory-backed table (real deployments): sum the files —
-                # getsize() on a directory returns the dirent size and would
-                # peg the derivation at the floor regardless of data volume
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        total += os.path.getsize(os.path.join(root, f))
-            else:
-                total += os.path.getsize(p)
-        except OSError:
-            pass
+        return env
+    total = sum(table_disk_bytes(sf_dir, t) for t in tables)
     return max(_ITER_PART_FLOOR, -(-total // _ITER_PART_TARGET_BYTES))
 
 
-class scoped_shuffle_partitions:
-    """Set ``spark.sql.shuffle.partitions`` for a builder scope and restore
-    on exit (the _run_stream discipline).  Plans compiled inside the scope
-    — including every lazy localCheckpoint's eager AQE materialization —
-    use the scoped count; the result plan compiled at action time stays on
-    the session default.  Session-global, like every conf: builders run
+@contextlib.contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` for a scope and restore it on
+    exit, also when the scope raises.  Plans compiled inside the scope —
+    including every lazy localCheckpoint's eager AQE materialization and a
+    streaming query's first batch, which pins its state partitioning — use
+    the scoped count; a result plan compiled at action time stays on the
+    session default.  Session-global, like every conf: builders run
     sequentially on the driver."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self._spark = spark
-        self._n = n
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    # ONE py4j round trip (keys().mkString), not 2N+2 (iterator + per-entry
-    # next()): iterative queries snapshot this map twice per checkpoint, and
-    # in a cache-heavy bench session the per-entry hops cost ~12 ms/call at
-    # 40 live caches vs 0.8 ms for the string form (measured, r16).
-    s = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
-    return {int(x) for x in s.split(",") if x}
-
-
-# r17: the before/after persistent-RDD-id diff below misattributes ids if
-# two threads checkpoint concurrently (r16 ADVICE).  Nothing does today —
-# the planted-recall thread pool builds plans only — but the lock makes the
-# tracking safe if a future builder checkpoints from a pool; held across
-# the localCheckpoint call on purpose (attribution requires it).
-_CKPT_TRACK_LOCK = threading.Lock()
-
-
-def checkpoint_tracked(df: DataFrame, ids_out: list[int]) -> DataFrame:
-    """``df.localCheckpoint()`` (eager), recording the id(s) of the cached
-    RDD(s) it creates into ``ids_out`` so they can be released later with
-    ``release_rdd_ids`` — localCheckpoint caches live at the RDD layer,
-    invisible to DataFrame.unpersist, and used to leak for the session
-    (iterative queries like connected components checkpoint per round)."""
-    spark = df.sparkSession
-    with _CKPT_TRACK_LOCK:
-        before = _persistent_rdd_ids(spark)
-        lc = df.localCheckpoint()
-        ids_out.extend(_persistent_rdd_ids(spark) - before)
-    return lc
-
-
-def checkpoint_tracked_lazy(df: DataFrame, ids_out: list[int]) -> DataFrame:
-    """``df.localCheckpoint(eager=False)`` with the same RDD-id tracking as
-    ``checkpoint_tracked`` — the lazy variant registers its RDD-layer cache
-    at CREATION time (verified: persist() runs inside localCheckpoint even
-    when materialization is deferred), so the before/after diff captures it
-    identically.  For iterative builders whose rounds materialize only at
-    collect time (no per-round count()), every round's checkpoint backs the
-    final plan: tie the ids to the result with ``release_rdds_with_result``."""
-    spark = df.sparkSession
-    with _CKPT_TRACK_LOCK:
-        before = _persistent_rdd_ids(spark)
-        lc = df.localCheckpoint(eager=False)
-        ids_out.extend(_persistent_rdd_ids(spark) - before)
-    return lc
-
-
-def release_rdd_ids(spark: SparkSession, ids: list[int]) -> None:
-    """Unpersist the RDD-layer caches with the given ids (non-blocking;
-    ids already evicted or a stopped session are fine)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
-        sc = spark.sparkContext._jsc.sc()
-        live = _persistent_rdd_ids(spark)
-        for i in ids:
-            if i in live:
-                # direct by-id unpersist: one py4j call per tracked id
-                # instead of a per-entry scan of the whole persistent map
-                sc.unpersistRDD(i, False)
-    except Exception:
-        # conservative fallback (unpersistRDD is private[spark] — public
-        # bytecode on every Spark 3.x/4.x, but guard against a future
-        # signature change): the original full-scan path
-        try:
-            it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-            while it.hasNext():
-                t = it.next()
-                if t._1() in ids:
-                    t._2().unpersist(False)
-        except Exception:
-            pass
-
-
-def release_rdds_with_result(result: DataFrame, spark: SparkSession, ids: list[int]) -> DataFrame:
-    """Release the tracked checkpoint caches when the RESULT handle is
-    dropped (the checkpointed RDDs back the result's plan, so they must
-    outlive it — same lifetime contract as ``scoped_persist``).
-
-    Also exposes the release through ``result._fns_release`` so
-    ``release_persisted(result)`` frees the checkpoint blocks
-    DETERMINISTICALLY, composing with any release scoped_persist already
-    attached (r13 ADVICE: GC-only release leaks until the collector runs)."""
-    import weakref
-
-    attach_release(result, weakref.finalize(result, release_rdd_ids, spark, list(ids)))
-    return result
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

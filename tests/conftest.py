@@ -61,6 +61,13 @@ def _canon_rows(rows, colnames):
     return out
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids in the SparkContext's persistent-RDD registry — every persist()
+    buffer and localCheckpoint cache alive in the session."""
+    s = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(x) for x in s.split(",") if x}
+
+
 def assert_flat_schema(df, name: str = "?"):
     """Driver-canonicalizer guard: the driver value-hashes collected cells,
     and a final schema containing arrays/maps/structs is the exact r02

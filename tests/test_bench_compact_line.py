@@ -38,10 +38,7 @@ def test_compact_map_contains_all_measured_pins():
     assert elided == len(timings) - len(qmap)
 
 
-def test_shed_keeps_pins_and_fits_budget():
-    """Replicate main()'s shedding loop: with an oversized map, unpinned
-    entries go first (cheapest first) and the line lands under budget with
-    every pinned name intact."""
+def _oversized_line_parts(filler: int) -> tuple[list[str], dict]:
     pins = bench._compact_pin_names()
     timings = {n: 1.0 + i * 0.01 for i, n in enumerate(pins)}
     timings.update({f"unpinned_query_with_a_long_name_{i:03d}": 0.2 + i * 0.001
@@ -49,20 +46,35 @@ def test_shed_keeps_pins_and_fits_budget():
     compact_queries, n_elided = bench._compact_query_map(timings)
     compact = {"metric": "headline_queries_total_wall_time", "value": 1.0,
                "unit": "sec", "queries": compact_queries, "qx": n_elided,
-               "filler": "x" * 700}
-    line = json.dumps(compact, separators=(",", ":"))
-    pinned = set(pins)
-    if len(line) > bench._COMPACT_LINE_BUDGET:
-        for name in sorted(compact_queries, key=compact_queries.get):
-            if len(line) <= bench._COMPACT_LINE_BUDGET:
-                break
-            if name in pinned:
-                continue
-            compact_queries.pop(name, None)
-            compact["qx"] = len(timings) - len(compact_queries)
-            line = json.dumps(compact, separators=(",", ":"))
+               "families": {"graph": 1.0}, "filler": "x" * filler}
+    return pins, compact
+
+
+def test_shed_keeps_pins_and_fits_budget(capsys):
+    """main()'s shedding pass: with an oversized map, unpinned entries go
+    first (cheapest first) and the line lands under budget with every
+    pinned name intact — and without a shed-pins warning."""
+    pins, compact = _oversized_line_parts(700)
+    line = bench._shed_compact_line(compact, 100, None)
     assert len(line) <= bench._COMPACT_LINE_BUDGET
     for n in pins:
-        assert n in compact_queries, "shedding removed a pinned name"
+        assert n in compact["queries"], "shedding removed a pinned name"
     parsed = json.loads(line)
-    assert parsed["queries"] == compact_queries
+    assert parsed["queries"] == compact["queries"]
+    assert parsed["qx"] == 100 - len(compact["queries"])
+    assert "WARN shed pinned" not in capsys.readouterr().err
+
+
+def test_backstop_shed_warns_on_pinned_names(capsys):
+    """When even the pinned names do not fit, the backstop loop drops them
+    (cheapest first) to keep the line printable — and says which on
+    stderr, since it breaks the additions-only pin contract."""
+    pins, compact = _oversized_line_parts(1500)
+    line = bench._shed_compact_line(compact, 100, None)
+    assert len(line) <= bench._COMPACT_LINE_BUDGET
+    assert "families" not in compact
+    dropped = [n for n in pins if n not in compact["queries"]]
+    assert dropped
+    err = capsys.readouterr().err
+    assert "[bench] WARN shed pinned query names:" in err
+    assert all(n in err for n in dropped)

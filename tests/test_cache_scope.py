@@ -2,10 +2,10 @@
 
 r8 ADVICE minor: query builders that persist() a shared intermediate (or
 localCheckpoint() inside an iterative loop) used to leak the cache for the
-whole session.  scoped_persist / checkpoint_tracked tie every such cache to
-the returned DataFrame via a weakref finalizer (superseded loop rounds are
-released inside the loop): collect + drop the handle → nothing new remains
-in the RDD cache registry.
+whole session.  A ``tables.BuildScope`` owns every such cache and binds it
+to the returned DataFrame's release list (superseded loop rounds are
+released inside the loop): collect + drop the handle, or call
+``release_persisted`` → nothing new remains in the RDD cache registry.
 
 Runs in its own module: a module-scoped fixture elsewhere that holds live
 handles over the same query plans would alias cache entries (Spark's
@@ -17,6 +17,11 @@ from __future__ import annotations
 import gc
 import os
 
+import pytest
+from pyspark import StorageLevel
+
+from tests.conftest import SF_DIR, persistent_rdd_ids
+
 
 def test_scoped_persist_releases_cache_on_handle_drop(spark):
     """Result-scoped caches vanish with the handle; the session-scoped
@@ -25,12 +30,11 @@ def test_scoped_persist_releases_cache_on_handle_drop(spark):
     queries, and must vanish on release_shared_lm()."""
     from flink_net_spark.queries import QUERIES
     from flink_net_spark.queries.text import release_shared_lm
-    from flink_net_spark.tables import _persistent_rdd_ids
 
     sf = "/root/testdata/sf0.001"
     release_shared_lm(spark)
     gc.collect()  # flush finalizers pending from earlier modules
-    baseline = _persistent_rdd_ids(spark)
+    baseline = persistent_rdd_ids(spark)
     shared: set[int] = set()
     for name in ("text_backoff_nll", "text_bigram_nll", "dedup_minhash_lsh",
                  "dedup_simhash_pairs", "dedup_substring_pairs",
@@ -43,7 +47,7 @@ def test_scoped_persist_releases_cache_on_handle_drop(spark):
                  "dedup_incremental_minhash", "dedup_span_novelty",
                  # r13 ADVICE: connected components' per-round LAZY
                  # localCheckpoints (7 label frames) were untracked — now
-                 # checkpoint_tracked_lazy + release_rdds_with_result
+                 # owned by its BuildScope and bound to the result
                  "graph_connected_components",
                  # r14: the pruned MaxSim leg persists its (doc, qtok)
                  # max-dot frame, scoped to the result
@@ -52,7 +56,7 @@ def test_scoped_persist_releases_cache_on_handle_drop(spark):
         df.collect()
         del df
         gc.collect()
-        leaked = _persistent_rdd_ids(spark) - baseline - shared
+        leaked = persistent_rdd_ids(spark) - baseline - shared
         if name == "text_backoff_nll":
             # first LM-family query materializes the shared build (bounded:
             # toks + count tables + score tables); remember, don't flag
@@ -61,7 +65,7 @@ def test_scoped_persist_releases_cache_on_handle_drop(spark):
         assert not leaked, (name, leaked)
     # the shared set is released explicitly, not by handle lifetime
     release_shared_lm(spark)
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    assert persistent_rdd_ids(spark) - baseline == set()
 
 
 def test_purge_dead_lm_entries_unpersists_through_handles(spark):
@@ -92,86 +96,70 @@ def test_purge_dead_lm_entries_unpersists_through_handles(spark):
 
 def test_keep_best_forwards_deterministic_release(spark):
     """r13 ADVICE: dedup_keep_best pinned its upstream resolve-groups
-    result only via _fns_upstream (GC-only — release_persisted(out) was a
-    no-op).  It must now forward a deterministic handle: after collect +
-    release_persisted(out), the upstream's checkpointed label RDDs are
-    gone WITHOUT waiting for the collector."""
+    result only through a GC-only attribute (release_persisted(out) was a
+    no-op).  Its release list must free the upstream deterministically:
+    after collect + release_persisted(out), the upstream's checkpointed
+    label RDDs are gone WITHOUT waiting for the collector."""
     from flink_net_spark.queries import QUERIES
-    from flink_net_spark.tables import _persistent_rdd_ids, release_persisted
+    from flink_net_spark.tables import release_persisted
 
     sf = "/root/testdata/sf0.001"
     gc.collect()
-    baseline = _persistent_rdd_ids(spark)
+    baseline = persistent_rdd_ids(spark)
     out = QUERIES["dedup_keep_best"](spark, sf)
     out.collect()
-    assert _persistent_rdd_ids(spark) - baseline, "expected live upstream caches"
+    assert persistent_rdd_ids(spark) - baseline, "expected live upstream caches"
     release_persisted(out)  # deterministic: NO gc.collect() here
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    assert persistent_rdd_ids(spark) - baseline == set()
     del out
     gc.collect()  # the GC backstop must stay idempotent after the fact
 
 
-def test_release_rdds_with_result_composes_with_scoped_persist(spark):
-    """release_rdds_with_result must chain onto an existing _fns_release
-    (graph_connected_components stacks it on scoped_persist): one
-    release_persisted() call frees BOTH the persisted frames and the
-    tracked checkpoint RDDs."""
-    from flink_net_spark.tables import (
-        _persistent_rdd_ids,
-        checkpoint_tracked_lazy,
-        release_persisted,
-        release_rdds_with_result,
-        scoped_persist,
-    )
+def test_bind_frees_persist_and_checkpoint_with_one_release(spark):
+    """A scope's persisted frame and its lazy checkpoint both move onto
+    the result's release list: one release_persisted() frees both."""
+    from flink_net_spark.tables import BuildScope, release_persisted
 
     gc.collect()
-    baseline = _persistent_rdd_ids(spark)
-    cached = spark.range(100).persist()
-    ids: list[int] = []
-    lc = checkpoint_tracked_lazy(spark.range(50), ids)
-    out = release_rdds_with_result(
-        scoped_persist(lc.crossJoin(cached.limit(1)), cached), spark, ids
-    )
+    baseline = persistent_rdd_ids(spark)
+    with BuildScope() as scope:
+        cached = scope.persist(spark.range(100))
+        lc = scope.checkpoint(spark.range(50))
+        out = scope.bind(lc.crossJoin(cached.limit(1)))
     out.collect()
-    assert ids and _persistent_rdd_ids(spark) - baseline
+    assert len(persistent_rdd_ids(spark) - baseline) == 2
     release_persisted(out)
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    assert persistent_rdd_ids(spark) - baseline == set()
 
 
 def test_release_attach_composes_in_either_nesting_order(spark):
-    """Round-14 review: scoped_persist used to OVERWRITE _fns_release, so
-    scoped_persist(release_rdds_with_result(...)) — the reverse of the
-    graph.py order — silently dropped the checkpoint release.  attach_release
-    must compose regardless of nesting order."""
-    from flink_net_spark.tables import (
-        _persistent_rdd_ids,
-        checkpoint_tracked_lazy,
-        release_persisted,
-        release_rdds_with_result,
-        scoped_persist,
-    )
+    """Round-14 review: a second release helper used to OVERWRITE the
+    first one's handle.  A scope bound before or after scoped_persist
+    must land on the SAME release list, so one release frees both."""
+    from flink_net_spark.tables import BuildScope, release_persisted, scoped_persist
 
     gc.collect()
-    baseline = _persistent_rdd_ids(spark)
-    cached = spark.range(64).persist()
-    ids: list[int] = []
-    lc = checkpoint_tracked_lazy(spark.range(32), ids)
-    # REVERSE order: rdds first, then scoped_persist on top
-    out = scoped_persist(
-        release_rdds_with_result(lc.crossJoin(cached.limit(1)), spark, ids),
-        cached,
-    )
-    out.collect()
-    assert ids and _persistent_rdd_ids(spark) - baseline
-    release_persisted(out)
-    assert _persistent_rdd_ids(spark) - baseline == set()
+    baseline = persistent_rdd_ids(spark)
+    for scope_first in (True, False):
+        cached = spark.range(64).persist()
+        with BuildScope() as scope:
+            lc = scope.checkpoint(spark.range(32))
+            out = lc.crossJoin(cached.limit(1))
+            if scope_first:
+                out = scoped_persist(scope.bind(out), cached)
+            else:
+                out = scope.bind(scoped_persist(out, cached))
+        out.collect()
+        assert len(persistent_rdd_ids(spark) - baseline) == 2
+        release_persisted(out)
+        assert persistent_rdd_ids(spark) - baseline == set()
 
 
 def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
     """r15 VERDICT #1a: graph_msf_boruvka's parquet-checkpoint temp dir
     must not strand /tmp when the caller DROPS the handle without calling
-    release_persisted — the rmtree is now a weakref.finalize on the
-    result, so GC is a sufficient backstop (and the explicit path stays
+    release_persisted — its removal rides the result's release list, whose
+    weakref.finalize backstop fires on GC (and the explicit path stays
     idempotent)."""
     import glob
     import tempfile
@@ -188,3 +176,93 @@ def test_msf_ckpt_dir_cleaned_on_handle_drop(spark):
     gc.collect()
     after = set(glob.glob(patt)) - before
     assert not after, f"ckpt dir(s) leaked after handle drop: {after}"
+
+
+def test_shared_shingle_cache_outlives_resolve_groups(spark):
+    """dedup_minhash_lsh and dedup_resolve_groups share the shingle cache
+    (one semantic plan).  With an uncollected LSH result still holding it,
+    building resolve_groups materializes the cache inside its first
+    checkpoint; releasing resolve_groups must leave it persistent until
+    the LSH result is released too.  (Attributing RDDs by a before/after
+    diff of the persistent registry misread the cache's buffer as part of
+    that checkpoint and unpersisted it.)"""
+    from flink_net_spark.queries import QUERIES
+    from flink_net_spark.queries.dedup import _spark_shingle_hash_df
+    from flink_net_spark.tables import release_persisted
+
+    sf = SF_DIR
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    lsh = QUERIES["dedup_minhash_lsh"](spark, sf)  # holds the cache, uncollected
+    rg = QUERIES["dedup_resolve_groups"](spark, sf)
+    rg.collect()
+    release_persisted(rg)
+    shingles = _spark_shingle_hash_df(spark, sf)  # same plan as the shared cache
+    assert shingles.storageLevel != StorageLevel.NONE
+    assert persistent_rdd_ids(spark) - baseline, "shared cache buffer was unpersisted"
+    assert lsh.collect()
+    release_persisted(lsh)
+    assert shingles.storageLevel == StorageLevel.NONE
+    assert persistent_rdd_ids(spark) - baseline == set()
+
+
+def test_checkpoint_release_spares_its_inputs_cache(spark):
+    """A checkpoint's release frees its own RDD only — not the buffer of a
+    persisted input that was first materialized by the same call."""
+    from flink_net_spark.tables import BuildScope
+
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    src = spark.range(300).selectExpr("id", "id % 7 AS k").persist()
+    with BuildScope() as scope:
+        scope.checkpoint(src.groupBy("k").count(), eager=True)
+        assert len(persistent_rdd_ids(spark) - baseline) == 2
+    assert len(persistent_rdd_ids(spark) - baseline) == 1, "input cache evicted"
+    src.unpersist()
+    assert persistent_rdd_ids(spark) - baseline == set()
+
+
+def test_raising_build_scope_releases_everything(spark):
+    """A builder step that raises inside ``with BuildScope()`` leaves no
+    new persistent RDD, no _PLAN_REFS entry and no pending clean-up."""
+    from flink_net_spark.tables import _PLAN_REFS, BuildScope, _plan_key
+
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    df = spark.range(300).selectExpr("id", "id % 5 AS k")
+    cleaned = []
+    with pytest.raises(RuntimeError, match="step failed"):
+        with BuildScope() as scope:
+            scope.on_release(cleaned.append, "tmpdir")
+            p = scope.persist(df)
+            p.count()
+            scope.checkpoint(p.groupBy("k").count(), eager=True)
+            scope.checkpoint(spark.range(40))
+            raise RuntimeError("step failed")
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert _plan_key(df) not in _PLAN_REFS
+    assert df.storageLevel == StorageLevel.NONE
+    assert cleaned == ["tmpdir"]
+
+
+def test_msf_failure_path_releases_edges_and_ckpt_dir(spark, monkeypatch):
+    """r16 ADVICE: when graph_msf_boruvka's forest-invariant check raises,
+    the persisted edge frame and the parquet-checkpoint dir must not leak
+    — the builder's scope releases both on the way out.  Two rounds with
+    zero pointer jumps leave a merge chain uncollapsed at sf0.001, which
+    trips the check."""
+    import glob
+    import tempfile
+
+    from flink_net_spark.queries import graph
+
+    monkeypatch.setattr(graph, "MSF_ROUNDS", 2)
+    monkeypatch.setattr(graph, "MSF_JUMPS", 0)
+    patt = os.path.join(tempfile.gettempdir(), "fns_msf_*")
+    before = set(glob.glob(patt))
+    gc.collect()
+    baseline = persistent_rdd_ids(spark)
+    with pytest.raises(AssertionError, match="forest invariant violated"):
+        graph.graph_msf_boruvka(spark, SF_DIR)
+    assert persistent_rdd_ids(spark) - baseline == set()
+    assert set(glob.glob(patt)) - before == set()

@@ -2,9 +2,9 @@
 
 1. ``_PLAN_REFS`` refcounting is thread-safe (VERDICT r16 #5): the
    sim_ann_planted_recall legs build on a 4-thread pool, so concurrent
-   scoped-persist acquire/release of the SAME semantic plan must never
-   lose an increment (a lost increment unpersists a cache another live
-   result still uses — silent recompute).
+   ``BuildScope`` persist/release of the SAME semantic plan must never
+   lose an increment, nor unpersist a cache a concurrent holder has just
+   taken (a lost cache is a silent recompute).
 2. ``_stage_dir`` stale-sibling pruning respects an mtime grace window
    (VERDICT r16 #8 / r16 ADVICE): a *recent* sibling staging may belong to
    a concurrent process still draining its stream — only aged siblings are
@@ -19,20 +19,27 @@
 from __future__ import annotations
 
 import os
+import sys
 import threading
 import time
 
+import pytest
+
+
+def _run_threads(target, n: int, timeout: float = 120.0) -> None:
+    threads = [threading.Thread(target=target) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout)
+    assert not any(t.is_alive() for t in threads), "worker thread hung"
+
 
 def test_plan_refs_concurrent_acquire_release(spark):
-    """Balanced acquire/release from 8 threads on one shared plan key must
-    end with the refcount table empty for that key (no stale entry from a
-    lost decrement, no premature eviction from a lost increment)."""
-    from flink_net_spark.tables import (
-        _PLAN_REFS,
-        _plan_key,
-        acquire_persisted,
-        release_acquired,
-    )
+    """Balanced scope persist/release from 8 threads on one shared plan key
+    must end with the refcount table empty for that key (no stale entry
+    from a lost decrement, no premature eviction from a lost increment)."""
+    from flink_net_spark.tables import _PLAN_REFS, BuildScope, _plan_key
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v").persist()
     df.count()
@@ -42,52 +49,73 @@ def test_plan_refs_concurrent_acquire_release(spark):
     def worker():
         try:
             for _ in range(300):
-                keys = acquire_persisted(df)
-                release_acquired(keys)
+                with BuildScope() as scope:
+                    scope.persist(df)
         except Exception as ex:  # pragma: no cover - failure path
             errs.append(ex)
 
-    threads = [threading.Thread(target=worker) for _ in range(8)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    _run_threads(worker, 8)
     assert not errs, f"worker raised: {errs[:1]}"
-    # balanced acquire/release: the entry must be gone (a lost decrement
-    # leaves a stale positive refcount; a lost increment pops it early and
-    # a later release would KeyError or double-unpersist)
     assert key not in _PLAN_REFS
-    # the test's own persist was released by the final release_acquired;
-    # re-persist state is irrelevant — just drop the handle
     df.unpersist()
 
 
 def test_plan_refs_concurrent_holders_keep_cache(spark):
-    """While any thread still holds an acquire, a concurrent release from
-    another thread must NOT evict the entry."""
-    from flink_net_spark.tables import (
-        _PLAN_REFS,
-        acquire_persisted,
-        release_acquired,
-    )
+    """While one scope still holds a persist, concurrent persist/release
+    churn from other threads must NOT evict the entry or its cache."""
+    from pyspark import StorageLevel
 
-    df = spark.range(500).selectExpr("id").persist()
-    df.count()
-    hold = acquire_persisted(df)  # long-lived user
+    from flink_net_spark.tables import _PLAN_REFS, BuildScope, _plan_key
+
+    df = spark.range(500).selectExpr("id")
+    key = _plan_key(df)
+    hold = BuildScope()  # long-lived user
+    hold.persist(df)
 
     def churn():
         for _ in range(200):
-            release_acquired(acquire_persisted(df))
+            with BuildScope() as scope:
+                scope.persist(df)
 
-    threads = [threading.Thread(target=churn) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert hold[0] in _PLAN_REFS, "churning pairs evicted a held cache"
-    assert _PLAN_REFS[hold[0]][0] == 1
-    release_acquired(hold)
-    assert hold[0] not in _PLAN_REFS
+    _run_threads(churn, 4)
+    assert key in _PLAN_REFS, "churning pairs evicted a held cache"
+    assert _PLAN_REFS[key][0] == 1
+    assert df.storageLevel != StorageLevel.NONE
+    hold.release(df)
+    assert key not in _PLAN_REFS
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_plan_refs_churn_never_evicts_a_live_holder(spark):
+    """ADVICE (medium): the last release used to pop the refcount under the
+    lock but unpersist after dropping it, so a concurrent acquire of the
+    same semantic key could register in between and lose its cache to the
+    late unpersist.  Every holder must see the cache live for as long as
+    it holds it — also when the churn keeps dropping the count to zero."""
+    from pyspark import StorageLevel
+
+    from flink_net_spark.tables import _PLAN_REFS, BuildScope, _plan_key
+
+    evicted: list[int] = []
+
+    def churn():
+        for i in range(100):
+            df = spark.range(700).selectExpr("id", "id % 3 AS k")  # one plan key
+            with BuildScope() as scope:
+                scope.persist(df)
+                if df.storageLevel == StorageLevel.NONE:
+                    evicted.append(i)
+
+    # more threads than cores, and frequent thread switches, so the
+    # release/acquire interleavings actually happen
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        _run_threads(churn, 2 * (os.cpu_count() or 2))
+    finally:
+        sys.setswitchinterval(interval)
+    assert not evicted, f"{len(evicted)} holders lost their cache"
+    assert _plan_key(spark.range(700).selectExpr("id", "id % 3 AS k")) not in _PLAN_REFS
 
 
 def test_stage_dir_prune_respects_mtime_grace(tmp_path):
@@ -180,5 +208,48 @@ def test_inc_state_shards_derivation_and_override(monkeypatch):
     lo = _inc_state_shards(40_000)
     hi = _inc_state_shards(400_000)
     assert hi > lo, "shard count must grow with the corpus"
+    monkeypatch.setenv("SPARK_GRAFT_INC_STATE_SHARDS", "77")
+    assert _inc_state_shards(40_000) == 77
+    # the override is clamped to the same bounds as the derivation
     monkeypatch.setenv("SPARK_GRAFT_INC_STATE_SHARDS", "7")
-    assert _inc_state_shards(40_000) == 7
+    assert _inc_state_shards(40_000) == 32
+    monkeypatch.setenv("SPARK_GRAFT_INC_STATE_SHARDS", "100000")
+    assert _inc_state_shards(40_000) == 4096
+
+
+@pytest.mark.parametrize("raw", ["abc", "0", "-3", "2.5"])
+def test_env_sizing_knobs_reject_bad_values(spark, monkeypatch, raw):
+    """A non-numeric or non-positive sizing knob fails up front with a
+    ValueError that names the variable — 0 shuffle partitions used to fail
+    at plan time, and 0 state shards made pmod(hash, 0) NULL shard keys."""
+    from flink_net_spark.queries.streaming_queries import _inc_state_shards, _run_stream
+    from flink_net_spark.tables import derived_shuffle_partitions
+
+    calls = {
+        "SPARK_GRAFT_ITER_SHUFFLE_PARTITIONS": lambda: derived_shuffle_partitions(
+            "/nonexistent", ["lineitem"]
+        ),
+        "SPARK_GRAFT_INC_STATE_SHARDS": lambda: _inc_state_shards(40_000),
+        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS": lambda: _run_stream(spark.range(1)),
+    }
+    for var, call in calls.items():
+        monkeypatch.setenv(var, raw)
+        with pytest.raises(ValueError, match=var):
+            call()
+        monkeypatch.delenv(var)
+
+
+def test_table_disk_bytes_counts_only_parquet_parts(tmp_path):
+    """A directory-backed table's size is its ``*.parquet`` parts: Spark's
+    ``_SUCCESS`` marker and ``.crc`` sidecars are not data."""
+    from flink_net_spark.tables import derived_shuffle_partitions, table_disk_bytes
+
+    d = tmp_path / "orders.parquet"
+    (d / "sub").mkdir(parents=True)
+    for name, size in (("part-0.parquet", 1000), ("sub/part-1.parquet", 24),
+                       ("_SUCCESS", 7), (".part-0.parquet.crc", 300 * 1024 * 1024)):
+        with open(d / name, "wb") as f:
+            f.truncate(size)
+    assert table_disk_bytes(str(tmp_path), "orders") == 1024
+    assert derived_shuffle_partitions(str(tmp_path), ["orders"]) == 4
+    assert table_disk_bytes(str(tmp_path), "missing") == 0
