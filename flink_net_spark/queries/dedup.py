@@ -25,11 +25,10 @@ from flink_net_spark.functions import hashing as H
 from flink_net_spark.queries import query
 from flink_net_spark.tables import (
     BuildScope,
-    derived_shuffle_partitions,
     load_table,
+    loop_scope,
     release_persisted,
     scoped_persist,
-    scoped_shuffle_partitions,
     spread_small_scan,
 )
 
@@ -481,15 +480,10 @@ def dedup_resolve_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a recursive CTE."""
     mp, mp_caches = _minhash_pairs(spark, sf_dir)
     pairs = mp.select("doc_a", "doc_b")
-    # r17 (guide §2.2): the convergence loop runs under an input-derived
-    # shuffle-partition count — the pair graph is pairs-not-documents sized
-    # (512 edges at sf0.1), yet every round's eager checkpoint + count ran
-    # 32-task stages.  Measured at sf0.1 (tools/exp_iter_parts.py,
-    # fingerprints identical): 2.80 → 1.99 s warm median.  MIN-over-BIGINT
-    # label propagation is partition-count-independent.
-    with BuildScope() as scope, scoped_shuffle_partitions(
-        spark, derived_shuffle_partitions(sf_dir, ["documents"])
-    ):
+    # the pair graph is pairs-not-documents sized (512 edges at sf0.1), so
+    # every round's eager checkpoint + count runs at the loop scope's
+    # input-derived partition count
+    with loop_scope(spark, sf_dir, ["documents"]) as scope:
         # Refcounted hold: a live dedup_minhash_lsh result may share these
         # caches (same semantic plan key); they stay cached until BOTH
         # users are done (r10 ADVICE).

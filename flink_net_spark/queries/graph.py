@@ -22,21 +22,25 @@ DataFrame; one iteration = one equi-join of edges(src) with the rank frame
 contributions combine map-side, so the reduce volume is one row per node.
 Nothing is ever collected; iteration count is a fixed constant, so the
 lineage stays bounded without checkpointing.
+
+Shared skeleton: every builder reads the co-purchase graph through
+``_copurchase_edges`` and names nodes through ``_decode``; PageRank and
+personalized PageRank are one ``_power_iteration``; the builders whose
+round frames are used twice per round (CC, SSSP, k-core, LPA) run
+``_rounds`` inside ``tables.loop_scope``, which MSF's parquet rounds open
+too.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.window import Window
 
 from flink_net_spark.queries import query
-from flink_net_spark.tables import (
-    BuildScope,
-    derived_shuffle_partitions,
-    load_table,
-    scoped_persist,
-    scoped_shuffle_partitions,
-)
+from flink_net_spark.tables import BuildScope, load_table, loop_scope, scoped_persist
 
 # Fixed-point PageRank parameters.  Damping 0.85 as the exact integer pair
 # (85, 100); rank unit 1e-6.  With N nodes total rank mass stays <= N * 1e6,
@@ -45,6 +49,117 @@ from flink_net_spark.tables import (
 PAGERANK_ITERS = 4
 PAGERANK_TELEPORT_E6 = 150_000  # (1 - 0.85) * 1e6, exact
 PAGERANK_TOPK = 100
+
+
+def _copurchase_edges(
+    spark: SparkSession,
+    sf_dir: str,
+    where: str | None = None,
+    weighted: bool = False,
+    by_src: bool = True,
+) -> DataFrame:
+    """The part<->supplier co-purchase graph as ``src, dst`` edges in BOTH
+    directions, one per distinct (part, supplier) pair of lineitem rows
+    passing ``where``; ``weighted`` adds ``w`` = the pair's exact BIGINT
+    MIN(l_quantity).  Node ids are 2*partkey / 2*suppkey+1 — disjoint
+    spaces, inverted by ``_decode``.  ``by_src`` hash-partitions on src, so
+    every src-keyed per-round join of a persisted edge frame reuses the
+    layout instead of re-shuffling the edges."""
+    li = load_table(spark, sf_dir, "lineitem")
+    if where:
+        li = li.filter(where)
+    ends = (
+        (F.col("l_partkey") * 2).cast("long").alias("src"),
+        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+    )
+    if weighted:
+        pairs = li.groupBy(*ends).agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
+    else:
+        pairs = li.select(*ends).distinct()
+    edges = pairs.union(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *pairs.columns[2:])
+    )
+    return edges.repartition(F.col("src")) if by_src else edges
+
+
+def _decode(node: str = "node") -> tuple[Column, Column]:
+    """``(kind, key)`` of a node id column: 'part'/'supplier' and its
+    TPC-H partkey/suppkey."""
+    kind = F.when(F.col(node) % 2 == 0, F.lit("part")).otherwise(F.lit("supplier"))
+    return kind.alias("kind"), F.expr(f"{node} div 2")
+
+
+def _is_seed(node: str, mod: int) -> Column:
+    """Part nodes whose partkey % ``mod`` == 1 — the BFS/PPR/SSSP seeds."""
+    return (F.col(node) % 2 == 0) & (_decode(node)[1] % mod == 1)
+
+
+def _power_iteration(
+    scope: BuildScope, spark: SparkSession, sf_dir: str, seed: Column, iters: int
+) -> DataFrame:
+    """``iters`` steps of the exact-integer personalized-PageRank recurrence
+    r' = is_seed * teleport + (85 * SUM(r div deg)) div 100 from
+    r0 = is_seed * 1e6, ``seed`` a predicate on ``node``.  PageRank is the
+    case where every node is a seed.  Returns ``node, deg, is_seed, r``.
+
+    Shape: the edge frame is persisted pre-partitioned on src and the deg
+    frame (the node universe — every node sends on this bidirectional
+    graph) is persisted because each step's left join re-reads it.  A step
+    is two joins — edges ⋈ shares (src-keyed) feeding the groupBy(dst)
+    partial-combined sum, then deg ⋈ sums (node-keyed, left) — and the rank
+    frame enters each step once, so lineage stays linear in ``iters``."""
+    edges = scope.persist(_copurchase_edges(spark, sf_dir))
+    deg = scope.persist(
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .withColumnRenamed("src", "node")
+        .withColumn("is_seed", seed.cast("long"))
+    )
+    r = deg.select(
+        "node", "deg", "is_seed",
+        (F.col("is_seed") * 1_000_000).cast("long").alias("r"),
+    )
+    for _ in range(iters):
+        rd = r.select(
+            F.col("node").alias("src"), F.expr("r div deg").alias("share")
+        )
+        s = (
+            edges.join(rd, "src")
+            .groupBy("dst")
+            .agg(F.sum("share").alias("s"))
+            .withColumnRenamed("dst", "node")
+        )
+        r = deg.join(s, "node", "left").select(
+            "node",
+            "deg",
+            "is_seed",
+            (
+                F.col("is_seed") * PAGERANK_TELEPORT_E6
+                + F.expr("(85 * coalesce(s, 0L)) div 100")
+            )
+            .cast("long")
+            .alias("r"),
+        )
+    return r
+
+
+def _rounds(
+    scope: BuildScope,
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Checkpoint ``init``, then ``rounds`` times the ``step`` of the last
+    frame, each round a lazy ``scope.checkpoint`` — a round frame used
+    twice per step would otherwise double the logical plan per round.  No
+    per-round count() forces materialization, so every round's cache backs
+    the final plan and is released with the result the scope binds.
+    Returns ``(last, previous)``, the pair every convergence audit
+    compares."""
+    last = prev = scope.checkpoint(init)
+    for _ in range(rounds):
+        prev, last = last, scope.checkpoint(step(last))
+    return last, prev
 
 
 def _duck_pagerank_oracle() -> str:
@@ -122,76 +237,26 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes orderBy+limit as TakeOrderedAndProject — per-partition
     partial top-k then a driver merge of k-row heads, never a global sort.
 
-    Scale (reshaped in round 13 after the r12 drift gate flagged a
-    persisting slowdown: 12 joins → 8): the rank frame CARRIES deg, so an
-    iteration is exactly two joins — edges⋈shares (src-keyed) feeding the
-    groupBy(dst) partial-combined sum, then deg⋈sums (node-keyed, left) to
-    apply the recurrence and re-emit deg for the next iteration's share
-    division.  The old shape paid a third join (rank⋈deg) per iteration
-    plus a tail rank⋈deg; both are gone, and the rank frame still enters
-    each new iteration exactly once, so lineage stays LINEAR in the
-    iteration count.  The edge frame is persisted PRE-PARTITIONED on src:
-    every per-iteration join reuses that partitioning (no edge re-shuffle;
-    only the one-row-per-node share frame moves), which at 1000 executors
-    is GraphX's edge-cut layout — edges static, rank traffic ∝ nodes.
+    Scale: ``_power_iteration`` with every node a seed (round 13 cut the
+    r12 shape from 12 joins to 8 by carrying deg in the rank frame; the
+    src-prepartitioned persisted edge frame is GraphX's edge-cut layout —
+    edges static, rank traffic ∝ nodes).
     Rank state is one BIGINT per node.  AQE skew-split covers hot nodes."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = (
-        pairs.union(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(F.col("src"))
-        .persist()
-    )
-    # deg doubles as the node universe (every node has outgoing edges on
-    # this bidirectional graph); persisted because each iteration's left
-    # join re-reads it and exchange reuse does not survive AQE replans
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("src", "node")
-        .persist()
-    )
-    r = deg.select("node", "deg", F.lit(1_000_000).cast("long").alias("r"))
-    for _ in range(PAGERANK_ITERS):
-        rd = r.select(
-            F.col("node").alias("src"), F.expr("r div deg").alias("share")
-        )
-        s = (
-            edges.join(rd, "src")
-            .groupBy("dst")
-            .agg(F.sum("share").alias("s"))
-            .withColumnRenamed("dst", "node")
-        )
-        r = deg.join(s, "node", "left").select(
-            "node",
-            "deg",
-            (
-                F.lit(PAGERANK_TELEPORT_E6)
-                + F.expr("(85 * coalesce(s, 0L)) div 100")
+    with BuildScope() as scope:
+        r = _power_iteration(scope, spark, sf_dir, F.lit(True), PAGERANK_ITERS)
+        kind, key = _decode()
+        # (rank DESC, key, kind) is (rank DESC, node): node = 2*key + [supplier]
+        out = (
+            r.select(
+                kind,
+                key.alias("key"),
+                F.col("deg").cast("long").alias("deg"),
+                F.col("r").alias("rank_e6"),
             )
-            .cast("long")
-            .alias("r"),
+            .orderBy(F.desc("rank_e6"), "key", "kind")
+            .limit(PAGERANK_TOPK)
         )
-    out = (
-        r.select(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("node div 2").alias("key"),
-            F.col("deg").cast("long").alias("deg"),
-            F.col("r").alias("rank_e6"),
-        )
-        .orderBy(
-            F.desc("rank_e6"), F.expr("key * 2 + if(kind = 'supplier', 1, 0)")
-        )
-        .limit(PAGERANK_TOPK)
-    )
-    return scoped_persist(out, edges, deg)
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -458,19 +523,9 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded constant, so lineage stays flat without checkpointing; the
     visited set is re-persisted per hop and every per-hop frontier is a
     distinct-deduped node list, never the edge multiset."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = _copurchase_edges(spark, sf_dir, by_src=False).persist()
     frontier = (
-        edges.filter(
-            (F.col("src") % 2 == 0)
-            & (F.expr("src div 2") % BFS_SEED_MOD == 1)
-        )
+        edges.filter(_is_seed("src", BFS_SEED_MOD))
         .select(F.col("src").alias("node"))
         .distinct()
         .persist()
@@ -490,18 +545,14 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).persist()
         frontier = nxt
         persisted += [nxt, visited]
+    kind, key = _decode()
     out = (
-        visited.groupBy(
-            "lvl",
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-        )
+        visited.groupBy("lvl", kind)
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr("node div 2")).alias("sum_key"),
-            F.min(F.expr("node div 2")).alias("min_key"),
-            F.max(F.expr("node div 2")).alias("max_key"),
+            F.sum(key).alias("sum_key"),
+            F.min(key).alias("min_key"),
+            F.max(key).alias("max_key"),
         )
         .orderBy("lvl", "kind")
     )
@@ -616,38 +667,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline for iterative algorithms.  Pointer jumping is what bounds
     the round count at web scale — plain hop propagation needs diameter
     rounds, doubling needs log(diameter)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(CC_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    # r17 (guide §2.2): the whole build loop runs under an input-derived
-    # shuffle-partition count — every round's frontier frame is tiny
-    # relative to the source, and the per-round AQE stage materializations
-    # were scheduling 32+ tasks each for kilobytes of labels.  Measured at
-    # sf0.1 (tools/exp_iter_parts.py, result fingerprints identical):
-    # 6.60 → 3.36 s warm median.  MIN-over-BIGINT label algebra is
-    # partition-count-independent by construction.
-    with BuildScope() as scope, scoped_shuffle_partitions(
-        spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
-    ):
-        edges = scope.persist(
-            pairs.union(
-                pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).repartition(F.col("src"))
-        )
-        # Lazy checkpoints: no per-round count() forces materialization, so
-        # EVERY round's label cache backs the final plan and is bound to the
-        # result handle (untracked, they leak at the RDD layer for the
-        # session — r13 ADVICE).
-        l = scope.checkpoint(
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lbl"))
-        )
-        prev = l
-        for _ in range(CC_ROUNDS):
-            prev = l
+    with loop_scope(spark, sf_dir, ["lineitem"]) as scope:
+        edges = scope.persist(_copurchase_edges(spark, sf_dir, CC_EDGE_FILTER))
+
+        def hop_and_jump(l: DataFrame) -> DataFrame:
             nb = (
                 edges.join(
                     l.select(F.col("node").alias("src"), F.col("lbl").alias("slbl")),
@@ -664,12 +687,19 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             j = m.select(F.col("node").alias("jn"), F.col("ml").alias("jl"))
-            l = scope.checkpoint(
-                m.join(j, m.ml == j.jn, "left").select(
-                    "node",
-                    F.least(F.col("ml"), F.coalesce("jl", "ml")).alias("lbl"),
-                )
+            return m.join(j, m.ml == j.jn, "left").select(
+                "node",
+                F.least(F.col("ml"), F.coalesce("jl", "ml")).alias("lbl"),
             )
+
+        l, prev = _rounds(
+            scope,
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("lbl")),
+            hop_and_jump,
+            CC_ROUNDS,
+        )
         chg = (
             l.select("node", "lbl")
             .join(prev.select("node", F.col("lbl").alias("plbl")), "node")
@@ -780,83 +810,32 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     with distance discounted by 0.85 per hop — the seed-expansion scoring
     CommonCrawl-style curation uses to weight crawl frontiers.
 
-    Same exact-integer recurrence and plan shape as graph_pagerank (deg
-    carried in the rank frame, two joins per iteration, src-prepartitioned
-    persisted edges, linear lineage) with two deltas: rank initializes to
-    1e6 on seeds / 0 elsewhere, and the teleport term multiplies an
-    is_seed flag carried in the rank frame.  Unreached nodes hold rank
+    The same ``_power_iteration`` as graph_pagerank with only the seeds
+    marked: rank initializes to 1e6 on seeds / 0 elsewhere, and the
+    teleport term multiplies the is_seed flag.  Unreached nodes hold rank
     exactly 0 (integer arithmetic, no epsilon) and are filtered — at
     {PPR_ITERS} iterations the support is exactly the BFS
     ≤{PPR_ITERS}-hop ball, which the oracle must agree on row-for-row.
 
     Output: top-{PPR_TOPK} by rank with total (rank DESC, node) order —
     TakeOrderedAndProject, never a global sort."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-    ).distinct()
-    edges = (
-        pairs.union(
-            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with BuildScope() as scope:
+        r = _power_iteration(
+            scope, spark, sf_dir, _is_seed("node", PPR_SEED_MOD), PPR_ITERS
         )
-        .repartition(F.col("src"))
-        .persist()
-    )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .withColumnRenamed("src", "node")
-        .withColumn(
-            "is_seed",
-            (
-                (F.col("node") % 2 == 0)
-                & (F.expr("node div 2") % PPR_SEED_MOD == 1)
-            ).cast("long"),
-        )
-        .persist()
-    )
-    r = deg.select(
-        "node", "deg", "is_seed",
-        (F.col("is_seed") * 1_000_000).cast("long").alias("r"),
-    )
-    for _ in range(PPR_ITERS):
-        rd = r.select(
-            F.col("node").alias("src"), F.expr("r div deg").alias("share")
-        )
-        s = (
-            edges.join(rd, "src")
-            .groupBy("dst")
-            .agg(F.sum("share").alias("s"))
-            .withColumnRenamed("dst", "node")
-        )
-        r = deg.join(s, "node", "left").select(
-            "node",
-            "deg",
-            "is_seed",
-            (
-                F.col("is_seed") * PAGERANK_TELEPORT_E6
-                + F.expr("(85 * coalesce(s, 0L)) div 100")
+        kind, key = _decode()
+        out = (
+            r.filter(F.col("r") > 0)
+            .select(
+                kind,
+                key.alias("key"),
+                (F.col("is_seed") == 1).alias("is_seed"),
+                F.col("r").alias("rank_e6"),
             )
-            .cast("long")
-            .alias("r"),
+            .orderBy(F.desc("rank_e6"), "key", "kind")
+            .limit(PPR_TOPK)
         )
-    out = (
-        r.filter(F.col("r") > 0)
-        .select(
-            F.when(F.col("node") % 2 == 0, F.lit("part"))
-            .otherwise(F.lit("supplier"))
-            .alias("kind"),
-            F.expr("node div 2").alias("key"),
-            (F.col("is_seed") == 1).alias("is_seed"),
-            F.col("r").alias("rank_e6"),
-        )
-        .orderBy(
-            F.desc("rank_e6"), F.expr("key * 2 + if(kind = 'supplier', 1, 0)")
-        )
-        .limit(PPR_TOPK)
-    )
-    return scoped_persist(out, edges, deg)
+        return scope.bind(out)
 
 
 # --------------------------------------------------------------------------
@@ -954,42 +933,24 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded per-(kind, dist-decile) histogram: dist <= {SSSP_HOPS}*50,
     so dist div 10 spans buckets 0..{SSSP_HOPS}*5 — <= 2*({SSSP_HOPS}*5+1)
     rows at any corpus size."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pw = li.groupBy(
-        (F.col("l_partkey") * 2).cast("long").alias("a"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
-    ).agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
-    # r17 (guide §2.2): input-derived shuffle partitions for the relax loop
-    # — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints identical):
-    # 5.79 → 3.20 s warm median.  MIN-over-BIGINT relaxation is
-    # partition-count-independent by construction.
-    with BuildScope() as scope, scoped_shuffle_partitions(
-        spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
-    ):
-        edges = scope.persist(
-            pw.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-            .union(pw.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
-            .repartition(F.col("src"))
-        )
-        dist = scope.checkpoint(
-            edges.filter(
-                (F.col("src") % 2 == 0)
-                & (F.expr("src div 2") % SSSP_SEED_MOD == 1)
+    with loop_scope(spark, sf_dir, ["lineitem"]) as scope:
+        edges = scope.persist(_copurchase_edges(spark, sf_dir, weighted=True))
+
+        def relax(dist: DataFrame) -> DataFrame:
+            hop = edges.join(dist.withColumnRenamed("node", "src"), "src").select(
+                F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
             )
+            return dist.unionByName(hop).groupBy("node").agg(F.min("dist").alias("dist"))
+
+        dist, prev = _rounds(
+            scope,
+            edges.filter(_is_seed("src", SSSP_SEED_MOD))
             .select(F.col("src").alias("node"))
             .distinct()
-            .withColumn("dist", F.lit(0).cast("long"))
+            .withColumn("dist", F.lit(0).cast("long")),
+            relax,
+            SSSP_HOPS,
         )
-        prev = dist
-        for _ in range(SSSP_HOPS):
-            prev = dist
-            relax = (
-                edges.join(dist.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            dist = scope.checkpoint(
-                dist.unionByName(relax).groupBy("node").agg(F.min("dist").alias("dist"))
-            )
         chg = (
             dist.join(
                 prev.select("node", F.col("dist").alias("pdist")), "node", "left"
@@ -997,17 +958,13 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("pdist").isNull() | (F.col("dist") < F.col("pdist")))
             .agg(F.count(F.lit(1)).cast("long").alias("n_improved_last"))
         )
+        kind, key = _decode()
         out = (
-            dist.groupBy(
-                F.when(F.col("node") % 2 == 0, F.lit("part"))
-                .otherwise(F.lit("supplier"))
-                .alias("kind"),
-                F.expr("dist div 10").alias("dist_bucket"),
-            )
+            dist.groupBy(kind, F.expr("dist div 10").alias("dist_bucket"))
             .agg(
                 F.count(F.lit(1)).alias("n_nodes"),
                 F.sum("dist").cast("long").alias("sum_dist"),
-                F.sum(F.expr("node div 2")).cast("long").alias("sum_key"),
+                F.sum(key).cast("long").alias("sum_key"),
             )
             .crossJoin(F.broadcast(chg))
             .select(
@@ -1105,51 +1062,39 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tracked ids released on the result handle (the CC/SSSP lineage
     discipline).  Peeling needs O(peel-depth) rounds, not O(diameter);
     the audit column makes an under-iterated run visible."""
-    li = load_table(spark, sf_dir, "lineitem").filter(KCORE_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("s"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("d"),
-    ).distinct()
-    with BuildScope() as scope:
-        edges = scope.persist(
-            pairs.union(
-                pairs.select(F.col("d").alias("s"), F.col("s").alias("d"))
-            ).repartition(F.col("s"))
-        )
-        alive = scope.checkpoint(edges.select(F.col("s").alias("node")).distinct())
-        prev = alive
-        for _ in range(KCORE_ROUNDS):
-            prev = alive
-            alive = scope.checkpoint(
-                edges.join(alive.withColumnRenamed("node", "s"), "s")
-                .join(alive.withColumnRenamed("node", "d"), "d")
-                .groupBy("s")
+    with loop_scope(spark, sf_dir, ["lineitem"]) as scope:
+        edges = scope.persist(_copurchase_edges(spark, sf_dir, KCORE_EDGE_FILTER))
+
+        def alive_degree(alive: DataFrame) -> DataFrame:
+            return (
+                edges.join(alive.withColumnRenamed("node", "src"), "src")
+                .join(alive.withColumnRenamed("node", "dst"), "dst")
+                .groupBy("src")
                 .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= KCORE_K)
-                .select(F.col("s").alias("node"))
             )
+
+        alive, prev = _rounds(
+            scope,
+            edges.select(F.col("src").alias("node")).distinct(),
+            lambda alive: alive_degree(alive)
+            .filter(F.col("deg") >= KCORE_K)
+            .select(F.col("src").alias("node")),
+            KCORE_ROUNDS,
+        )
         chg = (
             prev.agg(F.count(F.lit(1)).alias("np"))
             .crossJoin(F.broadcast(alive.agg(F.count(F.lit(1)).alias("nh"))))
             .select((F.col("np") - F.col("nh")).cast("long").alias("n_removed_last"))
         )
-        core_deg = (
-            edges.join(alive.withColumnRenamed("node", "s"), "s")
-            .join(alive.withColumnRenamed("node", "d"), "d")
-            .groupBy("s")
-            .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-        )
+        kind, key = _decode("src")
         out = (
-            core_deg.groupBy(
-                F.when(F.col("s") % 2 == 0, F.lit("part"))
-                .otherwise(F.lit("supplier"))
-                .alias("kind")
-            )
+            alive_degree(alive)
+            .groupBy(kind)
             .agg(
                 F.count(F.lit(1)).alias("n_nodes"),
-                F.sum(F.expr("s div 2")).cast("long").alias("sum_key"),
-                F.sum("core_deg").cast("long").alias("sum_core_deg"),
-                F.max("core_deg").cast("long").alias("max_core_deg"),
+                F.sum(key).cast("long").alias("sum_key"),
+                F.sum("deg").cast("long").alias("sum_core_deg"),
+                F.max("deg").cast("long").alias("max_core_deg"),
             )
             .crossJoin(F.broadcast(chg))
             .select(
@@ -1268,52 +1213,33 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry), so rounds are LOCAL-CHECKPOINTED with tracked ids released on
     the result handle.  Output is the bounded 2-row per-kind summary whose
     sum_label_key checksums the full label assignment."""
-    from pyspark.sql.window import Window
-
-    li = load_table(spark, sf_dir, "lineitem").filter(LPA_EDGE_FILTER)
-    pairs = li.select(
-        (F.col("l_partkey") * 2).cast("long").alias("s"),
-        (F.col("l_suppkey") * 2 + 1).cast("long").alias("d"),
-    ).distinct()
-    # r17 (guide §2.2): input-derived shuffle partitions for the half-step
-    # loop — measured at sf0.1 (tools/exp_iter_parts.py, fingerprints
-    # identical): 3.77 → 2.70 s warm median.  The mode vote is a COUNT
-    # plus a total-order tie-break — partition-count-independent.
-    with BuildScope() as scope, scoped_shuffle_partitions(
-        spark, derived_shuffle_partitions(sf_dir, ["lineitem"])
-    ):
-        edges = scope.persist(
-            pairs.union(
-                pairs.select(F.col("d").alias("s"), F.col("s").alias("d"))
-            ).repartition(F.col("s"))
-        )
-        labels = scope.checkpoint(
-            edges.select(F.col("s").alias("node"), F.col("s").alias("lbl")).distinct()
-        )
-        prev = labels
+    with loop_scope(spark, sf_dir, ["lineitem"]) as scope:
+        edges = scope.persist(_copurchase_edges(spark, sf_dir, LPA_EDGE_FILTER))
         rank = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("nl"))
-        for i in range(LPA_ROUNDS):
-            prev = labels
-            for color in (0, 1):
-                votes = (
-                    edges.filter(F.col("d") % 2 == color)
-                    .join(
-                        labels.select(
-                            F.col("node").alias("s"), F.col("lbl").alias("nl")
-                        ),
-                        "s",
-                    )
-                    .groupBy(F.col("d").alias("node"), "nl")
-                    .agg(F.count(F.lit(1)).alias("c"))
+
+        def half_step(labels: DataFrame, color: int) -> DataFrame:
+            votes = (
+                edges.filter(F.col("dst") % 2 == color)
+                .join(
+                    labels.select(F.col("node").alias("src"), F.col("lbl").alias("nl")),
+                    "src",
                 )
-                upd = (
-                    votes.withColumn("rn", F.row_number().over(rank))
-                    .filter(F.col("rn") == 1)
-                    .select("node", F.col("nl").alias("lbl"))
-                )
-                labels = scope.checkpoint(
-                    upd.union(labels.filter(F.col("node") % 2 == 1 - color))
-                )
+                .groupBy(F.col("dst").alias("node"), "nl")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            upd = (
+                votes.withColumn("rn", F.row_number().over(rank))
+                .filter(F.col("rn") == 1)
+                .select("node", F.col("nl").alias("lbl"))
+            )
+            return upd.union(labels.filter(F.col("node") % 2 == 1 - color))
+
+        labels, prev = _rounds(
+            scope,
+            edges.select(F.col("src").alias("node"), F.col("src").alias("lbl")).distinct(),
+            lambda labels: half_step(scope.checkpoint(half_step(labels, 0)), 1),
+            LPA_ROUNDS,
+        )
         chg = (
             labels.select("node", "lbl")
             .join(prev.select("node", F.col("lbl").alias("pl")), "node")
@@ -1321,17 +1247,14 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_changed_last"))
         )
         sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("sz"))
+        kind, label_key = _decode()[0], _decode("lbl")[1]
         out = (
             labels.join(sizes, "lbl")
-            .groupBy(
-                F.when(F.col("node") % 2 == 0, F.lit("part"))
-                .otherwise(F.lit("supplier"))
-                .alias("kind")
-            )
+            .groupBy(kind)
             .agg(
                 F.count(F.lit(1)).alias("n_nodes"),
                 F.countDistinct("lbl").cast("long").alias("n_communities"),
-                F.sum(F.expr("lbl div 2")).cast("long").alias("sum_label_key"),
+                F.sum(label_key).cast("long").alias("sum_label_key"),
                 F.max("sz").cast("long").alias("max_comm_size"),
             )
             .crossJoin(F.broadcast(chg))
@@ -1604,13 +1527,11 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql.window import Window
-
     # r15 VERDICT #1a: the ckpt dir must not strand /tmp when a caller
     # drops the handle without release_persisted — its removal rides the
     # result's release list, GC backstop included, and the scope removes it
     # itself if the build raises.
-    with BuildScope() as scope:
+    with loop_scope(spark, sf_dir, ["lineitem"]) as scope:
         ckdir = tempfile.mkdtemp(prefix="fns_msf_")
         scope.on_release(shutil.rmtree, ckdir, True)
 
@@ -1619,28 +1540,24 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path)
 
-        li = load_table(spark, sf_dir, "lineitem").filter(MSF_EDGE_FILTER)
-        ew = (
-            li.groupBy(
-                (F.col("l_partkey") * 2).cast("long").alias("a"),
-                (F.col("l_suppkey") * 2 + 1).cast("long").alias("b"),
-            )
-            .agg(F.min(F.col("l_quantity").cast("long")).alias("w"))
-            .select(
-                F.least("a", "b").alias("mu"), F.greatest("a", "b").alias("mx"), "w"
-            )
-        )
+        # (mu, mx): the undirected edge's endpoints in id order, so both
+        # directions of one edge share its (w, mu, mx) place in the total order
         ed = scope.persist(
-            ew.select(F.col("mu").alias("u"), F.col("mx").alias("v"), "w", "mu", "mx")
-            .union(
-                ew.select(
-                    F.col("mx").alias("u"), F.col("mu").alias("v"), "w", "mu", "mx"
-                )
-            )
-            .repartition(F.col("u"))
+            _copurchase_edges(spark, sf_dir, MSF_EDGE_FILTER, weighted=True)
+            .withColumn("mu", F.least("src", "dst"))
+            .withColumn("mx", F.greatest("src", "dst"))
         )
+
+        def cross(l: DataFrame) -> DataFrame:
+            """Edges whose endpoints carry different labels in ``l``."""
+            return (
+                ed.join(l.select(F.col("node").alias("src"), F.col("lbl").alias("c")), "src")
+                .join(l.select(F.col("node").alias("dst"), F.col("lbl").alias("oc")), "dst")
+                .filter(F.col("c") != F.col("oc"))
+            )
+
         l = ckpt(
-            ed.select(F.col("u").alias("node")).distinct().select(
+            ed.select(F.col("src").alias("node")).distinct().select(
                 "node", F.col("node").alias("lbl")
             ),
             "l0",
@@ -1648,16 +1565,10 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank = Window.partitionBy("c").orderBy("w", "mu", "mx")
         msts = []
         for r in range(MSF_ROUNDS):
-            cand = (
-                ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-                .join(
-                    l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v"
-                )
-                .filter(F.col("c") != F.col("oc"))
-                .select("c", "oc", "w", "mu", "mx")
-            )
             pick = ckpt(
-                cand.withColumn("rn", F.row_number().over(rank))
+                cross(l)
+                .select("c", "oc", "w", "mu", "mx")
+                .withColumn("rn", F.row_number().over(rank))
                 .filter(F.col("rn") == 1)
                 .select("c", "oc", "w", "mu", "mx"),
                 f"pick{r}",
@@ -1717,12 +1628,7 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"!= n_nodes={n_nodes_v} - n_components={n_comp_v} — merge-path "
                 f"depth exceeded the 2^{MSF_JUMPS} pointer-jump budget"
             )
-        aud = (
-            ed.join(l.select(F.col("node").alias("u"), F.col("lbl").alias("c")), "u")
-            .join(l.select(F.col("node").alias("v"), F.col("lbl").alias("oc")), "v")
-            .filter(F.col("c") != F.col("oc"))
-            .agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
-        )
+        aud = cross(l).agg((F.count(F.lit(1)) / 2).cast("long").alias("n_cross_last"))
         nstats = l.agg(
             F.countDistinct("lbl").cast("long").alias("n_components"),
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1733,8 +1639,8 @@ def graph_msf_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_edges"),
                 F.sum("w").cast("long").alias("sum_w"),
-                F.sum(F.expr("mu div 2")).cast("long").alias("sum_lo_key"),
-                F.sum(F.expr("mx div 2")).cast("long").alias("sum_hi_key"),
+                F.sum(_decode("mu")[1]).cast("long").alias("sum_lo_key"),
+                F.sum(_decode("mx")[1]).cast("long").alias("sum_hi_key"),
             )
             .crossJoin(F.broadcast(aud))
             .select(

@@ -207,7 +207,8 @@ def idle_session_timeout(
     session is emitted + purged (≙ EventTimeTrigger registering a timer at
     window.MaxTimestamp, DefaultTriggers.cs:7-29).  Demonstrates
     NeverTrigger-style behavior too: no emission happens on data, only on
-    timer."""
+    timer.  A session spans its earliest to its latest event time, in
+    whatever order the events arrive."""
 
     def fn(ctx: StateContext, pdfs: Iterator[pd.DataFrame]):
         if ctx.timed_out:
@@ -227,12 +228,12 @@ def idle_session_timeout(
         last = ctx.value("last")
         n = ctx.value("n", 0)
         for pdf in pdfs:
-            ms = (pdf[ts_col].astype("int64") // 1_000_000).tolist()
-            for t in ms:
-                if first is None:
-                    first = t
-                last = t if last is None else max(last, t)
-                n += 1
+            if len(pdf):
+                ms = pdf[ts_col].astype("int64") // 1_000_000
+                lo, hi = int(ms.min()), int(ms.max())
+                first = lo if first is None else min(first, lo)
+                last = hi if last is None else max(last, hi)
+                n += len(pdf)
         ctx.update("start", first)
         ctx.update("last", last)
         ctx.update("n", n)

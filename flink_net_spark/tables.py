@@ -302,9 +302,11 @@ def release_persisted(result: DataFrame) -> None:
         steps()
 
 
-# r17 (VERDICT r16 #3, guide §2.2): iterative builders (CC/SSSP/LPA/
-# resolve-groups) scope their per-round shuffles to a partition count
-# DERIVED from the input size instead of the session default.  At bench SF
+# r17 (VERDICT r16 #3, guide §2.2): iterative builders (``loop_scope``:
+# CC/SSSP/k-core/LPA/MSF/resolve-groups) scope their per-round shuffles to
+# a partition count DERIVED from the input size instead of the session
+# default.  MIN/COUNT label algebra and total-order ranks make their
+# results partition-count-independent by construction.  At bench SF
 # every round's frontier/label frame is a few thousand rows, yet each of
 # the 12-18 per-round AQE stage materializations scheduled 32+ tasks —
 # measured medians at sf0.1 (tools/exp_iter_parts.py, fingerprints
@@ -342,3 +344,16 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@contextlib.contextmanager
+def loop_scope(spark: SparkSession, sf_dir: str, tables: list[str]):
+    """The ``BuildScope`` of a builder that materializes rounds while it
+    builds (checkpoints, parquet round-trips, per-round counts), entered
+    under ``scoped_shuffle_partitions(derived_shuffle_partitions(sf_dir,
+    tables))`` so every round plan compiles at the input-derived count.
+    The session count is restored before the scope releases anything."""
+    with BuildScope() as scope, scoped_shuffle_partitions(
+        spark, derived_shuffle_partitions(sf_dir, tables)
+    ):
+        yield scope

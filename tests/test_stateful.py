@@ -147,6 +147,58 @@ def test_event_time_timer_fires_session(spark, tmp_path):
     }, f"unexpected sessions: {got}"
 
 
+def test_session_start_is_earliest_event_time(spark, tmp_path):
+    """A session starts at its EARLIEST event time, not at the first row
+    the operator happens to see: key 1's events arrive out of order, both
+    inside one batch and in a later batch (earlier than everything before
+    it, but within the watermark delay, so not late)."""
+    src_dir = str(tmp_path / "feed")
+    os.makedirs(src_dir)
+    base = 1_700_000_000_000  # ms
+    gap = 60_000
+
+    def write_chunk(name: str, rows):
+        df = spark.createDataFrame(rows, "k BIGINT, ts_ms BIGINT").withColumn(
+            "ts", F.timestamp_millis(F.col("ts_ms"))
+        )
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, name))
+
+    write_chunk("c1", [(1, base + 5_000), (1, base + 2_000), (2, base + 1_000)])
+    stream = (
+        spark.readStream.schema("k BIGINT, ts_ms BIGINT, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(src_dir, "c*"))
+        .withWatermark("ts", "10 minutes")
+    )
+    q = (
+        idle_session_timeout(stream, "k", "ts", gap_ms=gap)
+        .writeStream.format("memory")
+        .queryName("ooo_sessions")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    write_chunk("c2", [(1, base)])
+    q.processAllAvailable()
+    assert spark.table("ooo_sessions").count() == 0, "nothing may fire before watermark advances"
+
+    write_chunk("c3", [(3, base + 36_000_000_000)])
+    deadline = time.time() + 60
+    while time.time() < deadline and spark.table("ooo_sessions").count() < 2:
+        q.processAllAvailable()
+        time.sleep(0.5)
+    q.stop()
+    q.awaitTermination(30)
+
+    got = {r.k: (r.session_start_ms, r.session_end_ms, r.n_events)
+           for r in spark.table("ooo_sessions").collect()}
+    assert got == {
+        1: (base, base + 5_000 + gap, 3),
+        2: (base + 1_000, base + 1_000 + gap, 1),
+    }, f"unexpected sessions: {got}"
+
+
 def test_punctuated_watermark_fires_on_markers_and_drops_late(spark, tmp_path):
     """≙ PunctuatedWatermarkGenerator (WatermarkManager.cs:108-141): panes
     fire ONLY when a marker advances the watermark past their end, and an
