@@ -120,15 +120,13 @@ _DUCK_MINHASH_PAIR_CTES = f"""
 """
 
 
-def _lsh_candidates(sh: DataFrame) -> DataFrame:
-    """Banded-LSH candidate pairs (doc_a < doc_b, distinct) from a
-    (doc_id, sh) shingle frame: {MINHASH_K} minhashes → {LSH_BANDS} bands
-    of 2 rows → equi-join on (band, band_key).  The shared candidate
-    generator behind dedup_minhash_lsh / dedup_resolve_groups /
-    dedup_containment — the shuffle carries (doc_id, band_key) pairs,
-    never shingle arrays."""
+def _lsh_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, b, band_key) rows of a (doc_id, sh) shingle frame:
+    {MINHASH_K} minhashes → {LSH_BANDS} bands of 2 rows, each band keyed by
+    its two minhashes.  The one Spark spelling of the banding every MinHash
+    query (batch and stream) buckets on."""
     sig = sh.withColumn("sig", F.expr(H.spark_minhash_sig("sh", MINHASH_K)))
-    bands = sig.select(
+    return sig.select(
         "doc_id",
         F.explode(
             F.expr(
@@ -138,6 +136,14 @@ def _lsh_candidates(sh: DataFrame) -> DataFrame:
         ).alias("bk"),
     ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.band_key").alias("band_key"))
 
+
+def _lsh_candidates(sh: DataFrame) -> DataFrame:
+    """Banded-LSH candidate pairs (doc_a < doc_b, distinct) from a
+    (doc_id, sh) shingle frame: equi-join of ``_lsh_bands`` on (band,
+    band_key).  The shared candidate generator behind dedup_minhash_lsh /
+    dedup_resolve_groups / dedup_containment / dedup_lsh_recall_audit —
+    the shuffle carries (doc_id, band_key) pairs, never shingle arrays."""
+    bands = _lsh_bands(sh)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -1420,38 +1426,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tp = truth.filter("nu > 0 AND ni * 10 >= 3 * nu").select("doc_a", "doc_b")
-    bands = (
-        samp.withColumn("sig", F.expr(H.spark_minhash_sig("sh", MINHASH_K)))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {LSH_BANDS - 1}), "
-                    f"b -> struct(b AS b, "
-                    f"sig[2 * b] * {H.MOD}L + sig[2 * b + 1] AS band_key))"
-                )
-            ).alias("t"),
-        )
-        .select("doc_id", "t.b", "t.band_key")
-    )
-    ba = bands.select("doc_id", "b", "band_key")
-    bb = bands.select(
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("b").alias("b2"),
-        F.col("band_key").alias("band_key2"),
-    )
-    caught = (
-        ba.join(
-            bb,
-            (ba.b == bb.b2)
-            & (ba.band_key == bb.band_key2)
-            & (ba.doc_id < bb.doc_id_b),
-        )
-        .select(
-            F.col("doc_id").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
-        )
-        .distinct()
-    )
+    caught = _lsh_candidates(samp)
     n_samp = samp.agg(F.count(F.lit(1)).cast("bigint").alias("n_sample_docs"))
     n_true = tp.agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"))
     n_cand = caught.agg(
@@ -1642,16 +1617,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh, asymmetric new→existing join instead of the
     all-pairs self-join."""
     sh = _spark_shingle_hash_df(spark, sf_dir).persist()
-    sig = sh.withColumn("sig", F.expr(H.spark_minhash_sig("sh", MINHASH_K)))
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {LSH_BANDS - 1}), "
-                f"b -> struct(b AS b, sig[2*b] * {H.MOD}L + sig[2*b+1] AS band_key))"
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.band_key").alias("band_key"))
+    bands = _lsh_bands(sh)
     new_b = bands.filter(F.col("doc_id") % _INC_MOD == 0).select(
         F.col("doc_id").alias("new_id"), "b", "band_key"
     )
@@ -1659,6 +1625,20 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("old_id"), "b", "band_key"
     )
     cand = new_b.join(old_b, ["b", "band_key"]).select("new_id", "old_id").distinct()
+    return scoped_persist(_incoming_best_matches(spark, sf_dir, sh, cand), sh)
+
+
+def _incoming_best_matches(
+    spark: SparkSession, sf_dir: str, sh: DataFrame, cand: DataFrame
+) -> DataFrame:
+    """The incremental-dedup report from (new_id, old_id) candidate pairs:
+    exact shingle-Jaccard verify, then per incoming doc the candidate
+    count and best match (max Jaccard, tie → lowest old_id), LEFT JOINed
+    onto every incoming doc so a doc without candidates reports
+    (0, -1, 0.0, false).  Shared by the batch and stream incremental
+    queries."""
+    from pyspark.sql.window import Window as _W
+
     x = sh.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n"))
     y = sh.select(F.col("doc_id").alias("old_id"), F.col("sh").alias("sh_o"))
     inter = F.size(F.array_intersect("sh_n", "sh_o"))
@@ -1668,8 +1648,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(y, "old_id")
         .select("new_id", "old_id", (inter * F.lit(1.0) / union).alias("jaccard"))
     )
-    from pyspark.sql.window import Window as _W
-
     wc = _W.partitionBy("new_id")
     wr = _W.partitionBy("new_id").orderBy(F.col("jaccard").desc(), F.col("old_id"))
     best = (
@@ -1680,7 +1658,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _INC_MOD == 0
     ).select("doc_id")
-    return scoped_persist(
+    return (
         incoming.join(best, incoming.doc_id == best.new_id, "left")
         .select(
             "doc_id",
@@ -1691,8 +1669,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("jaccard") >= JACCARD_VERIFY_THRESHOLD, F.lit(False)
             ).alias("is_dup"),
         )
-        .orderBy("doc_id"),
-        sh,
+        .orderBy("doc_id")
     )
 
 

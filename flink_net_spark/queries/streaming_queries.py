@@ -24,17 +24,24 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import sys
 import tempfile
 import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from flink_net_spark.queries import query
-from flink_net_spark.sources import replay_table_as_stream
+from flink_net_spark.sources import replay_stage, replay_table_as_stream, stage_chunks
 from flink_net_spark.streaming import session, tumbling, with_bounded_out_of_orderness
-from flink_net_spark.tables import env_positive_int, scoped_shuffle_partitions
+from flink_net_spark.tables import (
+    BuildScope,
+    env_positive_int,
+    load_table,
+    scoped_shuffle_partitions,
+)
 
 HOUR_MS = 3_600_000
 
@@ -61,15 +68,6 @@ _INC_TARGET_BUCKETS_PER_SHARD = 300
 _INC_SHARDS_MIN, _INC_SHARDS_MAX = 32, 4096
 
 
-def _write_marker_atomic(path: str, content: str) -> None:
-    """Atomic marker (re)write: a concurrent reader never sees a truncated
-    or empty marker mid-rewrite (r17 — the "ok"→row-count upgrade path)."""
-    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(content)
-    os.replace(tmp, path)
-
-
 def _inc_state_shards(n_band_rows: int) -> int:
     n = env_positive_int("SPARK_GRAFT_INC_STATE_SHARDS")
     if n is None:
@@ -92,7 +90,7 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
     sibling stagings of the same (sf_dir, name) — the dir name embeds a
     fingerprint-independent base key — are pruned when a new fingerprint
     mints a fresh directory (bounded /tmp growth under in-place corpus
-    regeneration)."""
+    regeneration).  Stage and replay one with ``sources.replay_stage``."""
     srcs = [src] if isinstance(src, str) else list(src)
     fps = []
     for s in srcs:
@@ -122,7 +120,6 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
     # match the sibling glob and used to strand /tmp.
     import glob as _glob
     import re as _re
-    import shutil as _shutil
     import time as _time
 
     cutoff = _time.time() - _STAGE_PRUNE_GRACE_SEC
@@ -137,10 +134,10 @@ def _stage_dir(sf_dir: str, name: str, src: str | list[str] = "events") -> str:
         os.path.join(tempfile.gettempdir(), f"fns_stage_{base}_*")
     ):
         if old != path and _aged(old):
-            _shutil.rmtree(old, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
     for old in _glob.glob(os.path.join(tempfile.gettempdir(), "fns_stage_*")):
         if _re.fullmatch(r"fns_stage_[0-9a-f]{12}", os.path.basename(old)) and _aged(old):
-            _shutil.rmtree(old, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
     return path
 
 
@@ -160,19 +157,22 @@ def _run_stream(df: DataFrame, mode: str = "complete") -> DataFrame:
     parts = env_positive_int("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS") or 8
     spark = df.sparkSession
     table = f"fns_mem_{uuid.uuid4().hex[:10]}"
-    ckpt = tempfile.mkdtemp(prefix="fns_ckpt_")
-    with scoped_shuffle_partitions(spark, parts):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(30)
+    _drain(spark, df.writeStream.format("memory").queryName(table).outputMode(mode), parts)
     return spark.table(table)
+
+
+def _drain(spark: SparkSession, writer: DataStreamWriter, parts: int) -> None:
+    """Run a bounded stream to completion under ``parts`` shuffle
+    partitions, checkpointed in a scratch dir that is deleted once the
+    query has stopped — also when it fails."""
+    with tempfile.TemporaryDirectory(
+        prefix="fns_ckpt_", ignore_cleanup_errors=True
+    ) as ckpt, scoped_shuffle_partitions(spark, parts):
+        q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,7 +549,6 @@ def pipeline_five_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughput scales with partitions × batch_rows.
     """
     from flink_net_spark.operators.async_egress import AsyncEgressStage, TransientEgressError
-    from flink_net_spark.tables import load_table
 
     # Stage 1: gateway (rate-limited admission).
     ev = _events_stream(spark, sf_dir)
@@ -607,8 +606,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles.  This is the canonical way to enrich a 100 TB/day stream with
     reference data.
     """
-    from flink_net_spark.tables import load_table
-
     ev = _events_stream(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     enriched = ev.withColumn("nk", F.col("user_id") % 25).join(
@@ -705,36 +702,25 @@ def stream_batch_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins a running stream without reprocessing history through the
     stream path.
     """
-    from flink_net_spark.tables import ensure_read_confs, load_table
 
-    ensure_read_confs(spark)
-    split_stage = _stage_dir(sf_dir, "events_split")
-    marker = os.path.join(split_stage, "_staged")
-    if not os.path.exists(marker):
+    def half(live: bool, n_chunks: int) -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
-        half = ev.approxQuantile("event_id", [0.5], 0.0)[0]
-        ev.filter(F.col("event_id") <= half).repartition(2).write.mode("overwrite").parquet(
-            os.path.join(split_stage, "history")
-        )
-        ev.filter(F.col("event_id") > half).repartition(4).write.mode("overwrite").parquet(
-            os.path.join(split_stage, "live")
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        mid = ev.approxQuantile("event_id", [0.5], 0.0)[0]
+        side = (F.col("event_id") > mid) if live else (F.col("event_id") <= mid)
+        return ev.filter(side).withColumn("chunk", F.monotonically_increasing_id() % n_chunks)
 
     def keyed_agg(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value")
         )
 
-    # bounded half: ordinary batch read of the history directory
-    hist = keyed_agg(spark.read.parquet(os.path.join(split_stage, "history")))
+    # bounded half: ordinary batch read of the history stage
+    hist_stage = _stage_dir(sf_dir, "events_history")
+    stage_chunks(hist_stage, lambda: half(False, 2))
+    hist = keyed_agg(spark.read.parquet(hist_stage))
     # live half: micro-batched stream over the tail
-    schema = spark.read.parquet(os.path.join(split_stage, "live")).schema
-    live_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(os.path.join(split_stage, "live"))
+    live_stream = replay_stage(
+        spark, _stage_dir(sf_dir, "events_live"), lambda: half(True, 4), 2
     )
     live = _run_stream(keyed_agg(live_stream))
     # merge the partial aggregates across the boundary (Aggregate.Merge)
@@ -749,25 +735,16 @@ def stream_batch_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.orderBy("event_type")
 
 
-def _stage_punctuated_stream(
-    spark: SparkSession, sf_dir: str, stage_dir: str, n_chunks: int = 6, n_keys: int = 4
-) -> None:
-    """Stage the events table as timestamp-ordered parquet chunks with a
-    punctuation marker row per key appended to each chunk (marker ts = the
-    chunk's max event ts).  Lexical file names + sequential writes keep the
-    file-stream delivery order aligned with event time, the arrival shape a
-    punctuated source produces (markers interleaved with in-order data,
-    WatermarkManager.cs:108-141)."""
-    import shutil
-
+def _punctuated_chunks(
+    spark: SparkSession, sf_dir: str, n_chunks: int = 6, n_keys: int = 4
+) -> DataFrame:
+    """The events table as timestamp-ordered chunks with a punctuation
+    marker row per key appended to each chunk (marker ts = the chunk's max
+    event ts).  Replayed in chunk order, the file stream's delivery order
+    follows event time: the arrival shape a punctuated source produces
+    (markers interleaved with in-order data, WatermarkManager.cs:108-141)."""
     from pyspark.sql.window import Window
 
-    from flink_net_spark.tables import ensure_read_confs, load_table
-
-    ensure_read_confs(spark)
-    marker = os.path.join(stage_dir, "_staged")
-    if os.path.exists(marker):
-        return
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % n_keys).alias("k"), "ts", "value", "event_id"
     )
@@ -782,26 +759,9 @@ def _stage_punctuated_stream(
         F.lit(0.0).alias("value"),
         F.lit(True).alias("is_marker"),
     )
-    staged = chunked.select(
+    return chunked.select(
         "chunk", "k", "ts", "value", F.lit(False).alias("is_marker")
     ).unionByName(markers)
-    os.makedirs(stage_dir, exist_ok=True)
-    for i in range(n_chunks):
-        tmp = os.path.join(stage_dir, f"_tmp_{i}")
-        staged.filter(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in sorted(os.listdir(tmp)) if f.startswith("part-"))
-        dest = os.path.join(stage_dir, f"chunk_{i:02d}.parquet")
-        os.replace(os.path.join(tmp, part), dest)
-        # FileStreamSource orders files by modification time: sequential
-        # writes usually yield ascending mtimes, but a tie at coarse fs
-        # granularity could deliver a later chunk first and drop in-order
-        # rows as late-to-marker.  Pin strictly increasing mtimes.
-        os.utime(dest, (1_600_000_000 + i, 1_600_000_000 + i))
-        shutil.rmtree(tmp)
-    with open(marker, "w") as fh:
-        fh.write("ok")
 
 
 @query(
@@ -835,13 +795,11 @@ def stream_punctuated_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch boundaries and no in-order element was dropped."""
     from flink_net_spark.streaming.stateful import punctuated_window_aggregate
 
-    stage = _stage_dir(sf_dir, "events_punctuated")
-    _stage_punctuated_stream(spark, sf_dir, stage)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
+    stream = replay_stage(
+        spark,
+        _stage_dir(sf_dir, "events_punctuated"),
+        lambda: _punctuated_chunks(spark, sf_dir),
+        2,
     )
     fired = punctuated_window_aggregate(stream, "k", "ts", "value", "is_marker", HOUR_MS)
     return _run_stream(fired, mode="append").orderBy("k", "window_start_ms")
@@ -878,26 +836,28 @@ def stream_cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is one keyed shuffle against the snapshot (≙ MERGE INTO on a
     Delta/Iceberg table, where only touched files rewrite).
     """
-    from flink_net_spark.sinks import UpsertSink, run_to_completion
+    from flink_net_spark.sinks import UpsertSink
 
     ev = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", F.col("value")
     )
-    out_dir = tempfile.mkdtemp(prefix="fns_cdc_snap_")
-    ckpt = tempfile.mkdtemp(prefix="fns_cdc_ckpt_")
-    sink = UpsertSink(out_dir, ("user_id",), "event_id")
-    with scoped_shuffle_partitions(spark, 8):
-        run_to_completion(sink.writer(ev, ckpt))
-    return (
-        sink.snapshot(spark)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.round("value", 2).alias("last_value"),
+    with BuildScope() as scope:
+        # the lazy result reads the published snapshot: its dir lives
+        # until release_persisted(result)
+        out_dir = tempfile.mkdtemp(prefix="fns_cdc_snap_")
+        scope.on_release(shutil.rmtree, out_dir, True)
+        sink = UpsertSink(out_dir, ("user_id",), "event_id")
+        _drain(spark, ev.writeStream.foreachBatch(sink), 8)
+        return scope.bind(
+            sink.snapshot(spark)
+            .select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.col("event_type").alias("last_event_type"),
+                F.round("value", 2).alias("last_value"),
+            )
+            .orderBy("user_id")
         )
-        .orderBy("user_id")
-    )
 
 
 HALF_HOUR_MS = 1_800_000
@@ -1007,22 +967,15 @@ def stream_window_tumbling_offset(spark: SparkSession, sf_dir: str) -> DataFrame
 _LATE_MOD = 37
 
 
-def _stage_late_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> None:
+def _late_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THREE chunks — on-time half A (even event_id), on-time half B, then
     the held-back late subset — because Spark filters late input with the
     watermark that was in effect during the PREVIOUS micro-batch (the
     one-batch lag of eventTimeWatermarkForLateEvents, measured here: with
     only two chunks the late batch was filtered against the initial 1970
     watermark and nothing dropped).  With three, the late batch meets the
-    after-chunk-A watermark — deterministic and SQL-expressible.
-    Sequential writes give FileStreamSource the arrival order."""
-    from flink_net_spark.tables import ensure_read_confs, load_table
-
-    ensure_read_confs(spark)
-    marker = os.path.join(stage_dir, "_staged")
-    if os.path.exists(marker):
-        return
-    ev = load_table(spark, sf_dir, "events").select(
+    after-chunk-A watermark — deterministic and SQL-expressible."""
+    return load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 8).alias("k"),
         "ts",
         "value",
@@ -1031,19 +984,6 @@ def _stage_late_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> None
         .otherwise(1)
         .alias("chunk"),
     )
-    os.makedirs(stage_dir, exist_ok=True)
-    for i in (0, 1, 2):
-        tmp = os.path.join(stage_dir, f"_tmp_{i}")
-        ev.filter(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in sorted(os.listdir(tmp)) if f.startswith("part-"))
-        os.replace(os.path.join(tmp, part), os.path.join(stage_dir, f"chunk_{i:02d}.parquet"))
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 @query(
@@ -1076,13 +1016,8 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-back rows into watermark-closed windows are dropped, held-back
     rows into open windows merge, and only finalized windows emit.  See
     the module comment for the deterministic-lateness construction."""
-    stage = _stage_dir(sf_dir, "events_latedata")
-    _stage_late_stream(spark, sf_dir, stage)
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    stream = replay_stage(
+        spark, _stage_dir(sf_dir, "events_latedata"), lambda: _late_chunks(spark, sf_dir), 1
     )
     win = (
         with_bounded_out_of_orderness(stream, "ts", "1 hour")
@@ -1107,36 +1042,17 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUARTER_MS = 900_000
 
 
-def _stage_ordered_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> None:
-    """Stage events into four TIME-ORDERED chunks (ntile over event time)
-    written sequentially, so the file stream replays in event-time order:
-    every batch's rows sit entirely above the previous batch's watermark
-    and append-mode late-input filtering provably drops nothing — the
-    precondition for an exact SQL oracle over a multi-batch append run."""
-    from flink_net_spark.tables import ensure_read_confs, load_table
-
-    ensure_read_confs(spark)
-    marker = os.path.join(stage_dir, "_staged")
-    if os.path.exists(marker):
-        return
+def _ordered_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events in four TIME-ORDERED chunks (ntile over event time), so the
+    file stream replays in event-time order: every batch's rows sit
+    entirely above the previous batch's watermark and append-mode
+    late-input filtering provably drops nothing — the precondition for an
+    exact SQL oracle over a multi-batch append run."""
     from pyspark.sql.window import Window as W
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
+    return load_table(spark, sf_dir, "events").withColumn(
         "chunk", F.ntile(4).over(W.orderBy("ts", "event_id")) - 1
     )
-    os.makedirs(stage_dir, exist_ok=True)
-    for i in range(4):
-        tmp = os.path.join(stage_dir, f"_tmp_{i}")
-        ev.filter(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in sorted(os.listdir(tmp)) if f.startswith("part-"))
-        os.replace(os.path.join(tmp, part), os.path.join(stage_dir, f"chunk_{i:02d}.parquet"))
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 @query(
@@ -1174,22 +1090,17 @@ def stream_tiered_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events (n_subwindows = n_events) fails the oracle.
 
     Append-mode exactness: the replay is staged in event-time order (see
-    _stage_ordered_stream), so no row is ever late to tier 1; both tiers
+    _ordered_chunks), so no row is ever late to tier 1; both tiers
     share the monotone watermark and the oracle's single cutoff —
     finalized hours are exactly those ending at or before
     max_ts - 1h — reconstructs the emitted set in SQL."""
-    stage = _stage_dir(sf_dir, "events_ordered")
-    _stage_ordered_stream(spark, sf_dir, stage)
-    schema = spark.read.parquet(stage).schema
     # 2 files/trigger (r15, VERDICT r14 #5): the emitted set is slicing-
     # independent (watermark cutoff = global max_ts - 1h; tier-1 windows
     # finalize once regardless of batch boundaries), so 2 ordered batches
     # keep the cross-batch-state property at half the fixed per-trigger
     # cost of the old 1-file batches (~0.6s each on this box).
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
+    stream = replay_stage(
+        spark, _stage_dir(sf_dir, "events_ordered"), lambda: _ordered_chunks(spark, sf_dir), 2
     )
     tier1 = (
         with_bounded_out_of_orderness(stream, "ts", "1 hour")
@@ -1260,89 +1171,30 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs."""
     from flink_net_spark.queries.dedup import (
         _INC_MOD,
+        _incoming_best_matches,
+        _lsh_bands,
         _spark_shingle_hash_df,
-        H,
-        JACCARD_VERIFY_THRESHOLD,
-        LSH_BANDS,
-        MINHASH_K,
     )
     from flink_net_spark.streaming.stateful import map_groups_with_state
-    from flink_net_spark.tables import load_table, scoped_persist
 
-    sh = _spark_shingle_hash_df(spark, sf_dir).persist()
-
-    # v2: NULL band keys filtered at staging — bump invalidates v1 stages
-    stage = _stage_dir(sf_dir, "minhash_bands_v2", src="documents")
-    marker = os.path.join(stage, "_staged")
-    if not os.path.exists(marker):
-        sig = sh.withColumn("sig", F.expr(H.spark_minhash_sig("sh", MINHASH_K)))
-        bands = sig.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {LSH_BANDS - 1}), "
-                    f"b -> struct(b AS b, sig[2*b] * {H.MOD}L + sig[2*b+1]"
-                    " AS band_key))"
-                )
-            ).alias("bk"),
-        ).select(
-            "doc_id",
-            F.col("bk.b").alias("b"),
-            F.col("bk.band_key").alias("band_key"),
-            F.when(F.col("doc_id") % _INC_MOD == 0, F.lit("new"))
-            .otherwise(F.lit("old"))
-            .alias("role"),
-        )
+    def band_rows(sh: DataFrame) -> DataFrame:
         # empty-shingle docs carry NULL band keys: the batch op's banded
         # EQUI-JOIN drops them (NULL never equals NULL), but groupBy-keyed
         # state would bucket them TOGETHER and emit zero-union pairs —
         # filter to mirror the join semantics exactly.
-        bands = bands.filter(F.col("band_key").isNotNull())
-        bands.repartition(8).write.mode("overwrite").parquet(stage)
-        # marker carries the staged row count so the shard derivation below
-        # never costs an extra job on the marker-cached path
-        n_staged = spark.read.parquet(stage).count()  # parquet metadata count
-        _write_marker_atomic(marker, str(n_staged))
-    with open(marker) as fh:
-        _m = fh.read().strip()
-    n_band_rows = (
-        int(_m) if _m.isdigit()
-        # pre-r17 markers say "ok": one metadata-only count, then upgrade
-        else spark.read.parquet(stage).count()
-    )
-    if not _m.isdigit():
-        _write_marker_atomic(marker, str(n_band_rows))
-    schema = spark.read.parquet(stage).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(stage)
-    )
-
-    # r16 optimization (guide §4.1: fewer, larger units across the Python
-    # boundary): the corpus has ~37.7k distinct (band, band_key) buckets at
-    # sf0.1, and keying the state operator on the RAW bucket paid a
-    # per-GROUP python/pandas round trip plus a per-KEY state-store
-    # put+commit for every bucket in every micro-batch — measured 19.4 s
-    # warm drain, with addBatch ~8-10 s and RocksDB commit ~6.5-7 s/batch.
-    # The PHYSICAL state key is now a bounded shard `g = hash(b, band_key)
-    # mod n_shards` (r17: n_shards derived from the staged band-row count,
-    # env-overridable — see _inc_state_shards); each shard's state blob
-    # holds the per-bucket
-    # (olds, news) lists keyed "b:band_key", and the handler re-groups its
-    # batch rows per bucket, so the LOGICAL accumulation — and therefore
-    # the emitted new↔old product under ANY micro-batch slicing — is
-    # unchanged bucket-for-bucket (the drain still equals the batch banded
-    # join; pinned by test_stream_incremental_minhash_equals_batch).
-    # Measured warm drain after: ~2.0 s (state-store keys/batch: 37.7k →
-    # 128).  At production scale the shard count is sized so per-shard
-    # blobs stay bounded (shards ≈ buckets / target-bucket-per-shard),
-    # exactly how RocksDB key-groups are sized in the reference runtime.
-    n_shards = _inc_state_shards(n_band_rows)
-    sharded = stream.withColumn(
-        "g",
-        F.pmod(F.xxhash64("b", "band_key"), F.lit(n_shards)).cast("int"),
-    )
+        return (
+            _lsh_bands(sh)
+            .filter(F.col("band_key").isNotNull())
+            .select(
+                "doc_id",
+                "b",
+                "band_key",
+                F.when(F.col("doc_id") % _INC_MOD == 0, F.lit("new"))
+                .otherwise(F.lit("old"))
+                .alias("role"),
+                (F.monotonically_increasing_id() % 8).alias("chunk"),
+            )
+        )
 
     def fn(ctx, pdfs):
         import pandas as pd
@@ -1384,49 +1236,41 @@ def stream_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         if new_ids:
             yield pd.DataFrame({"new_id": new_ids, "old_id": old_ids})
 
-    emitted = _run_stream(
-        map_groups_with_state(
-            sharded, ["g"], fn,
-            "new_id BIGINT, old_id BIGINT", output_mode="append",
-        ),
-        mode="append",
-    )
-    cand = emitted.select("new_id", "old_id").distinct()
-
-    x = sh.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_n"))
-    y = sh.select(F.col("doc_id").alias("old_id"), F.col("sh").alias("sh_o"))
-    inter = F.size(F.array_intersect("sh_n", "sh_o"))
-    union = F.size("sh_n") + F.size("sh_o") - inter
-    ver = (
-        cand.join(x, "new_id")
-        .join(y, "old_id")
-        .select("new_id", "old_id", (inter * F.lit(1.0) / union).alias("jaccard"))
-    )
-    from pyspark.sql.window import Window as _W
-
-    wc = _W.partitionBy("new_id")
-    wr = _W.partitionBy("new_id").orderBy(F.col("jaccard").desc(), F.col("old_id"))
-    best = (
-        ver.withColumn("n_candidates", F.count(F.lit(1)).over(wc))
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-    )
-    incoming = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % _INC_MOD == 0)
-        .select("doc_id")
-    )
-    return scoped_persist(
-        incoming.join(best, incoming.doc_id == best.new_id, "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_candidates", F.lit(0)).cast("long").alias("n_candidates"),
-            F.coalesce("old_id", F.lit(-1)).cast("long").alias("best_match_id"),
-            F.round(F.coalesce("jaccard", F.lit(0.0)), 4).alias("best_jaccard"),
-            F.coalesce(
-                F.col("jaccard") >= JACCARD_VERIFY_THRESHOLD, F.lit(False)
-            ).alias("is_dup"),
+    # r16 optimization (guide §4.1: fewer, larger units across the Python
+    # boundary): the corpus has ~37.7k distinct (band, band_key) buckets at
+    # sf0.1, and keying the state operator on the RAW bucket paid a
+    # per-GROUP python/pandas round trip plus a per-KEY state-store
+    # put+commit for every bucket in every micro-batch — measured 19.4 s
+    # warm drain, with addBatch ~8-10 s and RocksDB commit ~6.5-7 s/batch.
+    # The PHYSICAL state key is now a bounded shard `g = hash(b, band_key)
+    # mod n_shards` (r17: n_shards derived from the staged band-row count,
+    # env-overridable — see _inc_state_shards); each shard's state blob
+    # holds the per-bucket
+    # (olds, news) lists keyed "b:band_key", and the handler re-groups its
+    # batch rows per bucket, so the LOGICAL accumulation — and therefore
+    # the emitted new↔old product under ANY micro-batch slicing — is
+    # unchanged bucket-for-bucket (the drain still equals the batch banded
+    # join; pinned by test_stream_incremental_minhash_equals_batch).
+    # Measured warm drain after: ~2.0 s (state-store keys/batch: 37.7k →
+    # 128).  At production scale the shard count is sized so per-shard
+    # blobs stay bounded (shards ≈ buckets / target-bucket-per-shard),
+    # exactly how RocksDB key-groups are sized in the reference runtime.
+    with BuildScope() as scope:
+        sh = scope.persist(_spark_shingle_hash_df(spark, sf_dir))
+        # v3: the marker holds the staged row count, so the shard count
+        # costs no Spark job once the bands are staged
+        stage = _stage_dir(sf_dir, "minhash_bands_v3", src="documents")
+        n_shards = _inc_state_shards(stage_chunks(stage, lambda: band_rows(sh)))
+        sharded = replay_stage(spark, stage, lambda: band_rows(sh), 4).withColumn(
+            "g",
+            F.pmod(F.xxhash64("b", "band_key"), F.lit(n_shards)).cast("int"),
         )
-        .orderBy("doc_id"),
-        sh,
-    )
+        emitted = _run_stream(
+            map_groups_with_state(
+                sharded, ["g"], fn,
+                "new_id BIGINT, old_id BIGINT", output_mode="append",
+            ),
+            mode="append",
+        )
+        cand = emitted.select("new_id", "old_id").distinct()
+        return scope.bind(_incoming_best_matches(spark, sf_dir, sh, cand))

@@ -31,9 +31,15 @@ record loops anywhere.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_net_spark.tables import ensure_read_confs, load_table
 
 
 @dataclass
@@ -206,6 +212,89 @@ def source_to_counter(source_df: DataFrame, counter_dir: str, checkpoint: str):
     return writer, sink
 
 
+# Staged replays: a bounded frame written once as ordered parquet chunks,
+# then replayed as a file stream.  One owner for the staging protocol, so
+# every replay gets the same guarantees:
+#   - the stage is complete before it is visible: chunks, then the marker,
+#     are written into a temp sibling that one rename publishes, so a
+#     stage path that exists is finished, and a write that raises leaves
+#     nothing there;
+#   - one parquet file per chunk, with strictly increasing mtimes in chunk
+#     order.  FileStreamSource orders files by modification time, so the
+#     chunk number is the delivery order; sequential writes alone can tie
+#     at coarse filesystem granularity and deliver a later chunk first.
+STAGE_MARKER = "_staged"
+_CHUNK_MTIME0 = 1_600_000_000
+
+
+def _staged_rows(marker: str) -> int | None:
+    """The row count a stage's marker holds; None when the stage is missing
+    or was written by an older layout whose marker holds no count."""
+    try:
+        with open(marker) as fh:
+            return int(fh.read())
+    except (OSError, ValueError):
+        return None
+
+
+def stage_chunks(stage_dir: str, chunks: Callable[[], DataFrame]) -> int:
+    """Stage the frame ``chunks()`` under ``stage_dir`` unless it is already
+    staged, and return the staged row count (kept in the marker, so a
+    staged dir costs no Spark job).  The frame's int ``chunk`` column
+    numbers the chunks; each becomes one file ``chunk_<n>.parquet`` without
+    that column, written in one Spark job."""
+    marker = os.path.join(stage_dir, STAGE_MARKER)
+    n_rows = _staged_rows(marker)
+    if n_rows is not None:
+        return n_rows
+    df = chunks()
+    spark = df.sparkSession
+    tmp = f"{stage_dir}.{uuid.uuid4().hex[:8]}.tmp"
+    try:
+        out = os.path.join(tmp, "_write")
+        df.repartition("chunk").write.partitionBy("chunk").parquet(out)
+        parts = sorted(
+            (int(d.split("=", 1)[1]), d) for d in os.listdir(out) if d.startswith("chunk=")
+        )
+        for i, (c, d) in enumerate(parts):
+            (part,) = [f for f in os.listdir(os.path.join(out, d)) if f.startswith("part-")]
+            dest = os.path.join(tmp, f"chunk_{c:04d}.parquet")
+            os.replace(os.path.join(out, d, part), dest)
+            os.utime(dest, (_CHUNK_MTIME0 + i, _CHUNK_MTIME0 + i))
+        shutil.rmtree(out)
+        n_rows = spark.read.parquet(tmp).count()
+        with open(os.path.join(tmp, STAGE_MARKER), "w") as fh:  # last, then publish
+            fh.write(str(n_rows))
+        try:
+            os.rename(tmp, stage_dir)
+        except OSError:
+            if _staged_rows(marker) is None:  # unfinished, or an older layout
+                shutil.rmtree(stage_dir)
+                os.rename(tmp, stage_dir)
+            # else a concurrent stager published first; its chunks are equal
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return n_rows
+
+
+def replay_stage(
+    spark: SparkSession,
+    stage_dir: str,
+    chunks: Callable[[], DataFrame],
+    max_files_per_trigger: int,
+) -> DataFrame:
+    """``stage_chunks``, then the stage read back as a file stream of
+    ``max_files_per_trigger`` chunks per micro-batch, in chunk order."""
+    ensure_read_confs(spark)
+    stage_chunks(stage_dir, chunks)
+    schema = spark.read.parquet(stage_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(stage_dir)
+    )
+
+
 def replay_table_as_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -218,23 +307,16 @@ def replay_table_as_stream(
 
     Mirrors the reference's E2E strategy (synthetic messages produced into
     Kafka, then consumed — stress_test_passed_output.txt:52-61): the table
-    is staged once into ``n_chunks`` parquet files, then read back with
-    ``readStream`` + ``maxFilesPerTrigger`` so the stream arrives in
-    multiple micro-batches.  Used by the streaming correctness queries and
-    the exactly-once tests.
+    is staged once into ``n_chunks`` parquet files, rows dealt round-robin,
+    then read back with ``readStream`` + ``maxFilesPerTrigger`` so the
+    stream arrives in multiple micro-batches.  Used by the streaming
+    correctness queries and the exactly-once tests.
     """
-    from flink_net_spark.tables import ensure_read_confs, load_table
-
-    ensure_read_confs(spark)
-    marker = os.path.join(stage_dir, "_staged")
-    if not os.path.exists(marker):
-        df = load_table(spark, sf_dir, name)
-        df.repartition(n_chunks).write.mode("overwrite").parquet(stage_dir)
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    schema = spark.read.parquet(stage_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(stage_dir)
+    return replay_stage(
+        spark,
+        stage_dir,
+        lambda: load_table(spark, sf_dir, name).withColumn(
+            "chunk", F.monotonically_increasing_id() % n_chunks
+        ),
+        max_files_per_trigger,
     )
